@@ -7849,91 +7849,46 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness gate records rows for exactly the first 50 entries, so
     the dict rotates which queries sit in that window (policy + per-round
     membership: COVERAGE.md, regenerable via tools/coverage_map.py).
-    Round-15 window, in order:
+    The window, in order:
 
-    1. ann_ivf_streamed + incremental_embedding_dedup — added late in r14
-       (locally value-exact at sf0.01 AND sf1 since then) but never
-       driver-rowed; they head this window per the standing "every query
-       earns driver evidence" contract;
-    2. the 37 r11-stale queries (latest driver row = r11), standing
-       order (contamination_report ... heavy_hitters);
-    3. the 11 oldest r12-window rows to fill the 50
-       (hll_merge ... salted_agg).
+    1. ann_hnsw_sharded, ann_ivf_appended, ann_pq_index, ann_ivfpq_index —
+       value-exact locally at sf0.01 and sf1 since r14 but never
+       gate-rowed (tools/coverage_map.py counts a never-rowed query in
+       this window as scheduled, not stale);
+    2. the other searches rebuilt on the retrieval core
+       (embedding_topk, ann_lsh, ann_ivf, ann_ivf_streamed, ann_hnsw) and
+       side_input_multimap, whose side-input guard changed with it;
+    3. the r16-changed sites: dedup_embedding_lsh, continuous_rollup,
+       discarding_panes and the stage_bounded site incremental_dedup;
+    4. the 36 queries whose latest gate row is oldest (r12), standing
+       order (skewed_join ... audio_g711).
 
-    Post-window: the four queries ADDED this round (ann_hnsw_sharded,
-    ann_ivf_appended, ann_pq_index, ann_ivfpq_index — locally value-exact, heading the r16 rotation for
-    their first driver rows; the coverage_map ratchet enforces that), then
-    the remaining 39 r12-window queries (r16 rotation candidates, standing
-    order), then the 50 r13-window queries, then the 50 r14-window queries
-    (freshest driver evidence, last). After this round no pre-existing
-    query's latest driver row predates r12. tools/check_oracle.py still value-checks ALL queries
-    every round, and tools/coverage_map.py now FAILS (exit 1) if a query
-    exists for two full rounds without a driver row (freshness ratchet,
-    VERDICT r14 ask #5)."""
+    Post-window, oldest evidence first: the last three r12 rows, then the
+    r13-window, r14-window and r15/r16-window queries. tools/check_oracle.py
+    still value-checks ALL queries every round, and tools/coverage_map.py
+    FAILS (exit 1) if a query outside the window exists for two full
+    rounds without a gate row (freshness ratchet, VERDICT r14 ask #5)."""
     return {
-        # -- r15 driver window (first 50) ----------------------------------
-        # (a) the two queries added post-window in r14 — first driver rows
-        "ann_ivf_streamed": q_ann_ivf_streamed,
-        "incremental_embedding_dedup": q_incremental_embedding_dedup,
-        # (b) the 37 r11-stale queries, standing order
-        "contamination_report": q_contamination_report,
-        "semantic_dedup_incremental": q_semantic_dedup_incremental,
-        "weighted_sample": q_weighted_sample,
-        "stateful_stream": q_stateful_stream,
-        "dedup_simhash": q_dedup_simhash,
-        "data_mixture": q_data_mixture,
-        "pricing_summary": q_pricing_summary,
-        "streaming_dedup": q_streaming_dedup,
-        "ann_lsh": q_ann_lsh,
-        "png_decode": q_png_decode,
-        "jpeg_decode": q_jpeg_decode,
-        "gif_decode": q_gif_decode,
-        "video_decode": q_video_decode,
-        "group_by_key": q_group_by_key,
-        "map_with_parallelism": q_map_with_parallelism,
-        "side_input_multimap": q_side_input_multimap,
-        "dist_cache": q_dist_cache,
-        "asof_join": q_asof_join,
-        "async_lookup": q_async_lookup,
-        "batch_by_key_sizes": q_batch_by_key_sizes,
-        "cogroup": q_cogroup,
-        "cogroup_3way": q_cogroup_3way,
-        "corpus_stats": q_corpus_stats,
-        "decontaminate": q_decontaminate,
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "distinct_by_key": q_distinct_by_key,
-        "embedding_topk": q_embedding_topk,
-        "fingerprint_dedup": q_fingerprint_dedup,
-        "fold_global": q_fold_global,
-        "global_top": q_global_top,
-        "group_map_reduce": q_group_map_reduce,
-        "hash_join": q_hash_join,
-        "hash_lookup": q_hash_lookup,
-        "heavy_hitters": q_heavy_hitters,
-        # (c) the 11 oldest r12-window rows, filling the 50
-        "hll_merge": q_hll_merge,
-        "intersection": q_intersection,
-        "json_extract": q_json_extract,
-        "large_orders": q_large_orders,
-        "mean_by_key": q_mean_by_key,
-        "multi_join": q_multi_join,
-        "partition_counts": q_partition_counts,
-        "pipe_identity": q_pipe_identity,
-        "reduce_by_key": q_reduce_by_key,
-        "safe_map": q_safe_map,
-        "salted_agg": q_salted_agg,
-        # ---- end of the 50-row driver window (gate cuts at entry 50) ------
-        # NEW post-window this round (locally value-checked; heads the r16
-        # rotation for its first driver row — the ratchet in
-        # tools/coverage_map.py enforces that)
+        # -- correctness-gate window (first 50) -----------------------------
+        # (a) the four queries that never had a gate row
         "ann_hnsw_sharded": q_ann_hnsw_sharded,
         "ann_ivf_appended": q_ann_ivf_appended,
         "ann_pq_index": q_ann_pq_index,
         "ann_ivfpq_index": q_ann_ivfpq_index,
-        # r12-window remainder — r16 rotation candidates, standing order
+        # (b) the other top-k searches and the side-input guard user,
+        #     all rebuilt on functions/retrieval.py
+        "embedding_topk": q_embedding_topk,
+        "ann_lsh": q_ann_lsh,
+        "ann_ivf": q_ann_ivf,
+        "ann_ivf_streamed": q_ann_ivf_streamed,
+        "ann_hnsw": q_ann_hnsw,
+        "side_input_multimap": q_side_input_multimap,
+        # (c) the sites changed in r16
+        "dedup_embedding_lsh": q_dedup_embedding_lsh,
+        "continuous_rollup": q_continuous_rollup,
+        "discarding_panes": q_discarding_panes,
+        "incremental_dedup": q_incremental_dedup,
+        # (d) the oldest rows (latest gate row r12), standing order
         "skewed_join": q_skewed_join,
         "smb_join": q_smb_join,
         "sparse_join": q_sparse_join,
@@ -7970,20 +7925,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jpeg_progressive": q_jpeg_progressive,
         "jpeg12_decode": q_jpeg12_decode,
         "audio_g711": q_audio_g711,
+        # ---- end of the 50-row gate window (gate cuts at entry 50) --------
+        # r12-window remainder, next in the rotation
         "audio_adpcm": q_audio_adpcm,
         "audio_flac": q_audio_flac,
         "audio_mp3_probe": q_audio_mp3_probe,
-        # the 50 r13-window queries
+        # the r13-window queries
         "video_probe": q_video_probe,
         "avi_audio": q_avi_audio,
         "audio_resample": q_audio_resample,
-        "ann_hnsw": q_ann_hnsw,
         "cohort_retention": q_cohort_retention,
         "autocomplete": q_autocomplete,
         "top_sessions": q_top_sessions,
         "spam_users": q_spam_users,
         "data_checks": q_data_checks,
-        "incremental_dedup": q_incremental_dedup,
         "metrics": q_metrics,
         "quality_funnel": q_quality_funnel,
         "pack_greedy": q_pack_greedy,
@@ -7994,7 +7949,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_session": q_streaming_session,
         "streaming_join": q_streaming_join,
         "dedup_clusters": q_dedup_clusters,
-        "ann_ivf": q_ann_ivf,
         "kv_store_join": q_kv_store_join,
         "smb_transform": q_smb_transform,
         "lm_score": q_lm_score,
@@ -8024,8 +7978,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "window_weekly": q_window_weekly,
         "json_roundtrip": q_json_roundtrip,
         "text_roundtrip": q_text_roundtrip,
-        # the 50 r14-window queries — freshest driver evidence, last
-        "dedup_embedding_lsh": q_dedup_embedding_lsh,
+        # the r14-window queries
         "tfrecord_roundtrip": q_tfrecord_roundtrip,
         "binary_roundtrip": q_binary_roundtrip,
         "object_roundtrip": q_object_roundtrip,
@@ -8051,7 +8004,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_lines": q_dedup_lines,
         "files_with_path": q_files_with_path,
         "curation_e2e": q_curation_e2e,
-        "continuous_rollup": q_continuous_rollup,
         "hash_intersect": q_hash_intersect,
         "hash_subtract": q_hash_subtract,
         "combine_pandas": q_combine_pandas,
@@ -8074,7 +8026,53 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winnow_fingerprints": q_winnow_fingerprints,
         "dsir_select": q_dsir_select,
         "orc_roundtrip": q_orc_roundtrip,
-        "discarding_panes": q_discarding_panes,
+        "incremental_embedding_dedup": q_incremental_embedding_dedup,
+        # the r15/r16-window queries — freshest gate evidence, last
+        "contamination_report": q_contamination_report,
+        "semantic_dedup_incremental": q_semantic_dedup_incremental,
+        "weighted_sample": q_weighted_sample,
+        "stateful_stream": q_stateful_stream,
+        "dedup_simhash": q_dedup_simhash,
+        "data_mixture": q_data_mixture,
+        "pricing_summary": q_pricing_summary,
+        "streaming_dedup": q_streaming_dedup,
+        "png_decode": q_png_decode,
+        "jpeg_decode": q_jpeg_decode,
+        "gif_decode": q_gif_decode,
+        "video_decode": q_video_decode,
+        "group_by_key": q_group_by_key,
+        "map_with_parallelism": q_map_with_parallelism,
+        "dist_cache": q_dist_cache,
+        "asof_join": q_asof_join,
+        "async_lookup": q_async_lookup,
+        "batch_by_key_sizes": q_batch_by_key_sizes,
+        "cogroup": q_cogroup,
+        "cogroup_3way": q_cogroup_3way,
+        "corpus_stats": q_corpus_stats,
+        "decontaminate": q_decontaminate,
+        "dedup_embedding": q_dedup_embedding,
+        "dedup_exact": q_dedup_exact,
+        "dedup_minhash_lsh": q_dedup_minhash_lsh,
+        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+        "distinct_by_key": q_distinct_by_key,
+        "fingerprint_dedup": q_fingerprint_dedup,
+        "fold_global": q_fold_global,
+        "global_top": q_global_top,
+        "group_map_reduce": q_group_map_reduce,
+        "hash_join": q_hash_join,
+        "hash_lookup": q_hash_lookup,
+        "heavy_hitters": q_heavy_hitters,
+        "hll_merge": q_hll_merge,
+        "intersection": q_intersection,
+        "json_extract": q_json_extract,
+        "large_orders": q_large_orders,
+        "mean_by_key": q_mean_by_key,
+        "multi_join": q_multi_join,
+        "partition_counts": q_partition_counts,
+        "pipe_identity": q_pipe_identity,
+        "reduce_by_key": q_reduce_by_key,
+        "safe_map": q_safe_map,
+        "salted_agg": q_salted_agg,
     }
 
 

@@ -30,6 +30,7 @@ Layout:
   functions/substr_dedup.py  exact-substring dedup (+ incremental index)
   functions/semdedup.py embedding-space SemDeDup (+ incremental index)
   functions/dsir.py     DSIR importance selection toward a target corpus
+  functions/retrieval.py   top-k core: side-input guard, candidate cut, exact rescore
   functions/similarity.py  cosine top-k: brute GEMM / LSH / SQ8 / gated HNSW
   functions/ivf.py      IVF coarse quantizer + persisted probe index
   functions/pq.py       product quantization (ADC, IVF-PQ)

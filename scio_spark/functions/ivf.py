@@ -1,27 +1,29 @@
 """IVF (inverted-file) approximate nearest neighbor — the k-means scale path.
 
-Complements functions/similarity.py: hyperplane LSH needs no training but
-gives uncontrolled bucket sizes; IVF trains a coarse quantizer (k-means
-centroids), assigns every corpus vector to its nearest centroid (the
-"inverted lists"), and searches only the ``n_probe`` lists nearest to each
-query. The classic FAISS-style layout expressed as DataFrames:
+A coarse quantizer (k-means centroids) assigns every corpus vector to its
+nearest centroid (the "inverted lists"); a search touches only the
+``n_probe`` lists nearest to each query. The FAISS-style layout as
+DataFrames:
 
-- train: pyspark.ml KMeans on a corpus sample (one pass, driver-held
-  centroids — `n_clusters × dim` floats, trivially broadcastable);
-- assign: Arrow-batched numpy GEMM against the broadcast centroid matrix
-  (plan size constant in n_clusters — literal expansion dies at k ≥ ~256);
-- search: query → n_probe nearest centroids → semi-join the corpus on
-  centroid id → exact re-rank. Corpus scan work drops by ~n_probe/n_clusters.
-
-At 100 TB the inverted lists would be a bucketed/partitioned table on
-``centroid`` (operators/smb.py), making each query's probe a partition-pruned
-read instead of a scan.
+- train: seeded numpy Lloyd on a bounded driver sample (or pyspark.ml
+  KMeans), centroids are `n_clusters × dim` floats;
+- assign / probe: Arrow-batched numpy GEMM against the broadcast centroid
+  matrix (plan size constant in n_clusters);
+- persist: a centroid-partitioned parquet table, so a probe is a
+  partition-pruned read;
+- search: the retrieval core (functions/retrieval.py) with the GEMM
+  scorer — routed broadcast queries (``route_queries`` + ``scan``) or a
+  salted centroid cogroup (``cogroup``) — then the exact rescore and rank.
+  With n_probe = n_clusters the output is exact top-k.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import retrieval as R
 
 
 def _centroids(
@@ -54,8 +56,6 @@ def _centroids(
     small k)."""
     sample = corpus.sample(False, sample_fraction, seed) if sample_fraction < 1.0 else corpus
     if trainer == "local":
-        import numpy as np
-
         rows = sample.select(vec_col).limit(train_rows_cap).collect()
         mat = np.array([list(r[0]) for r in rows], dtype=np.float64)
         mat = mat[np.lexsort(mat.T[::-1])]  # collect-order independence
@@ -98,8 +98,6 @@ def assign_centroid(df: DataFrame, vec_col: str, centroids: list[list[float]]) -
     A literal-expression argmax works at k≈16 but the generated code grows
     O(k·dim) and blows past the JIT/codegen limits at realistic k (256–4096);
     the GEMM keeps the plan size constant in k."""
-    import numpy as np
-
     cent = np.array(centroids, dtype=np.float64)
     bc = df.sparkSession.sparkContext.broadcast(cent)
     schema = _with_centroid(df)
@@ -118,96 +116,10 @@ def assign_centroid(df: DataFrame, vec_col: str, centroids: list[list[float]]) -
     return df.mapInPandas(gen, schema)
 
 
-def _cogroup_gemm_candidates(
-    probes: DataFrame,
-    inv: DataFrame,
-    k: int,
-    margin: float,
-    corpus_blocks: int = 1,
-    max_group_rows: int = 2_000_000,
-) -> DataFrame:
-    """(query_id, neighbor_id) ANN candidates from a salted centroid
-    cogroup + numpy GEMM — the candidate stage shared by every streamed
-    IVF path (cosine_topk_ivf_streamed, search_ivf_index(streamed=True)).
-
-    Per-task memory bound (VERDICT r14: the unguarded cogroup was the one
-    genuine 100×-scale seam): the corpus side is salted to
-    (centroid, pmod(xxhash64(neighbor_id), corpus_blocks)) and probes are
-    replicated to every block, so one task materializes at most
-    Θ(n / (n_clusters · corpus_blocks)) corpus vectors — the containment
-    argument survives block-splitting unchanged (a true top-k candidate is
-    top-k within ANY subset of its probed list that contains it, so the
-    per-block top-(k+4∪ties) union still contains it; parity pinned in
-    tests/test_ann_streamed.py). The query side scales as
-    Θ(m · n_probe / n_clusters) — bounded by sizing n_clusters (k ~ √n),
-    same rule as semdedup. Both sides are guarded by ``max_group_rows``
-    (the semdedup max_cluster_rows discipline) with the matching lever
-    named in the error. Candidate cuts keep ties and the rounding margin
-    (similarity.keep_candidates) so the set is partition-order independent
-    and rounding-safe."""
-    import numpy as np
-    import pandas as pd
-
-    from scio_spark.functions.similarity import keep_candidates
-
-    B = max(1, corpus_blocks)
-    inv_b = inv.withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(B)).cast("int")
-    )
-    probes_b = probes.withColumn(
-        "__blk", F.explode(F.array(*[F.lit(i) for i in range(B)]))
-    )
-
-    def gemm(_key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"query_id": [], "neighbor_id": []}).astype("int64")
-        if len(cpdf) > max_group_rows:
-            raise ValueError(
-                f"streamed IVF search: inverted-list block for centroid "
-                f"{int(cpdf['centroid'].iloc[0])} has {len(cpdf)} rows > "
-                f"max_group_rows={max_group_rows}; increase corpus_blocks "
-                f"(per-task corpus block is ~n/(n_clusters*corpus_blocks) "
-                f"rows) or n_clusters, or raise the cap explicitly"
-            )
-        if len(qpdf) > max_group_rows:
-            raise ValueError(
-                f"streamed IVF search: {len(qpdf)} queries routed to "
-                f"centroid {int(qpdf['centroid'].iloc[0])} > "
-                f"max_group_rows={max_group_rows}; increase n_clusters "
-                f"(expected per-centroid query volume is "
-                f"~queries*n_probe/n_clusters; size k ~ sqrt(n)) or raise "
-                f"the cap explicitly"
-            )
-        q_ids = qpdf["query_id"].to_numpy()
-        q_mat = np.array(list(qpdf["__qv"]), dtype=np.float64)
-        b_ids = cpdf["neighbor_id"].to_numpy()
-        block = np.array(list(cpdf["__cv"]), dtype=np.float64)
-        sims = q_mat @ block.T
-        kk = min(k + 4, sims.shape[1])
-        out_q, out_n = [], []
-        for qi in range(sims.shape[0]):
-            idx = keep_candidates(sims[qi], kk, margin)
-            keep = idx[b_ids[idx] != q_ids[qi]]
-            out_q.extend([q_ids[qi]] * len(keep))
-            out_n.extend(b_ids[keep])
-        return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    # each corpus vector lives in exactly one (centroid, block), so the
-    # (query, neighbor) pairs are unique across groups — no dedup shuffle
-    # needed before the rescore
-    return (
-        probes_b.groupBy("centroid", "__blk")
-        .cogroup(inv_b.groupBy("centroid", "__blk"))
-        .applyInPandas(gemm, "query_id long, neighbor_id long")
-    )
-
-
 def probe_centroids(df: DataFrame, vec_col: str, centroids: list[list[float]], n_probe: int) -> DataFrame:
     """Each query row → its n_probe nearest centroid ids (row replicated
     n_probe×), via the same broadcast-GEMM pattern; ties broken by lower
     centroid id (stable argsort) for deterministic probing."""
-    import numpy as np
-
     cent = np.array(centroids, dtype=np.float64)
     bc = df.sparkSession.sparkContext.broadcast(cent)
     schema = _with_centroid(df)
@@ -230,68 +142,24 @@ def probe_centroids(df: DataFrame, vec_col: str, centroids: list[list[float]], n
     return df.mapInPandas(gen, schema)
 
 
-def _route_queries_driver(queries: DataFrame, id_col: str, vec_col: str,
-                          cents: list[list[float]], n_probe: int):
-    """Driver-side probe routing for the broadcast-query (side-input) regime:
-    collect the (by-contract bounded) query set, rank centroids with the same
-    stable-argsort tie-break as probe_centroids, and pack per-centroid query
-    blocks. Returns (packed {centroid: (ids, matrix)}, probed centroid list —
-    at most n_clusters ints, the literal a partition filter needs)."""
-    import numpy as np
-
-    qrows = queries.select(id_col, vec_col).collect()
-    if not qrows:
-        return {}, []
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    cmat = np.array(cents, dtype=np.float64)
-    p = min(n_probe, len(cents))
-    order = np.argsort(-(q_mat @ cmat.T), axis=1, kind="stable")[:, :p]
-    packed: dict[int, tuple] = {}
-    for c in np.unique(order):
-        rows = np.nonzero((order == c).any(axis=1))[0]
-        packed[int(c)] = (q_ids[rows], q_mat[rows])
-    return packed, sorted(packed)
+def route_queries(queries: R.SideInput, cents: list[list[float]], n_probe: int) -> dict:
+    """Driver-side probe routing of a collected query side: {centroid: row
+    indices of the queries probing it}, with the same stable-argsort
+    tie-break as probe_centroids. Its keys are the probed-centroid list a
+    partition filter needs (at most n_clusters ints)."""
+    if queries.rows.empty:
+        return {}
+    q = R._mat(queries.rows["__qv"], np.float64)
+    order = np.argsort(
+        -(q @ np.array(cents, dtype=np.float64).T), axis=1, kind="stable"
+    )[:, : min(n_probe, len(cents))]
+    return {int(c): np.nonzero((order == c).any(axis=1))[0] for c in np.unique(order)}
 
 
-def _routed_gemm_candidates(inv: DataFrame, packed: dict, k: int,
-                            margin: float) -> DataFrame:
-    """(query_id, neighbor_id) ANN candidates for the broadcast-query regime
-    — the side-input sibling of _cogroup_gemm_candidates, shared by
-    cosine_topk_ivf and search_ivf_index(streamed=False): one numpy GEMM per
-    (Arrow batch × centroid group) of the inverted lists against the queries
-    routed to that centroid, keeping top-(k+4) per list with ties and the
-    rounding margin (similarity.keep_candidates) so the candidate set is
-    batch-order independent and rounding-safe. ``inv`` must carry
-    (neighbor_id, __cv, centroid)."""
-    import numpy as np
-    import pandas as pd
-
-    from scio_spark.functions.similarity import keep_candidates
-
-    bc = inv.sparkSession.sparkContext.broadcast(packed)
-
-    def gen(batches):
-        tbl = bc.value
-        for pdf in batches:
-            for cen, grp in pdf.groupby("centroid"):
-                hit = tbl.get(int(cen))
-                if hit is None:
-                    continue
-                ids, mat = hit
-                block = np.array(list(grp["__cv"]), dtype=np.float64)
-                b_ids = grp["neighbor_id"].to_numpy()
-                sims = mat @ block.T  # probing queries × block
-                kk = min(k + 4, sims.shape[1])
-                out_q, out_n = [], []
-                for qi in range(sims.shape[0]):
-                    idx = keep_candidates(sims[qi], kk, margin)
-                    keep = idx[b_ids[idx] != ids[qi]]
-                    out_q.extend([ids[qi]] * len(keep))
-                    out_n.extend(b_ids[keep])
-                yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    return inv.mapInPandas(gen, "query_id long, neighbor_id long")
+def probed_centroids(probes: DataFrame) -> list[int]:
+    """The distinct centroids of distributed probes — the literal list a
+    partition filter needs (at most n_clusters ints)."""
+    return sorted(r["centroid"] for r in probes.select("centroid").distinct().collect())
 
 
 def write_small_json(spark, dir_path: str, obj: dict) -> None:
@@ -439,35 +307,25 @@ def search_ivf_index(
 ) -> DataFrame:
     """Search a persisted IVF index: route each query to its n_probe nearest
     centroids, then read ONLY those partitions (`centroid IN (...)` reaches
-    the scan as a PartitionFilter — assert via .explain) and exact-fold
-    re-rank. The probed-centroid LIST is always collected — it is at most
-    n_clusters ints regardless of query volume, and it must be a literal
-    for partition pruning to fire.
+    the scan as a PartitionFilter) and exact-fold re-rank. The
+    probed-centroid list is always collected — at most n_clusters ints,
+    and it must be a literal for partition pruning to fire.
 
-    Default: the routed query set is broadcast into the pruned-partition
-    join — broadcast-sized BY CONTRACT, guarded by ``max_query_rows``.
+    Default: the query set is a guarded side input (``max_query_rows``),
+    routed driver-side and broadcast into the pruned-list scan.
     ``streamed=True``: corpus-scale query workloads — the probes stay a
-    DataFrame and join the pruned partitions as a salted centroid cogroup
-    + GEMM (the shared _cogroup_gemm_candidates stage), so nothing
-    query-sized passes through the driver or a broadcast; per-task memory
-    is bounded by ``corpus_blocks`` / ``max_group_rows`` (see the helper's
-    docstring)."""
+    DataFrame and meet the pruned lists in the core's salted centroid
+    cogroup, so nothing query-sized passes through the driver or a
+    broadcast; per-task memory is bounded by ``corpus_blocks`` /
+    ``max_group_rows`` (retrieval.cogroup)."""
     import json
-
-    from scio_spark.functions.similarity import require_side_input_sized
-
-    if not streamed:
-        require_side_input_sized(
-            queries, max_query_rows, "search_ivf_index", "max_query_rows"
-        )
-    from scio_spark.functions.similarity import cut_margin
 
     cents = json.loads(
         read_small_json(spark, path.rstrip("/") + "__centroids")["centroids"]
     )
-    margin = cut_margin(score_decimals)
+    margin = R.cut_margin(score_decimals)
 
-    def _inv(probed):
+    def lists(probed):
         return (
             spark.read.parquet(path)
             .filter(F.col("centroid").isin(list(probed)))
@@ -478,57 +336,21 @@ def search_ivf_index(
             )
         )
 
+    q = R.as_queries(queries, id_col, vec_col)
     if streamed:
-        probes = probe_centroids(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")),
-            "__qv",
-            cents,
-            n_probe,
+        probes = probe_centroids(q, "__qv", cents, n_probe)
+        inv = lists(probed_centroids(probes))
+        cands = R.cogroup(
+            probes, inv, R.Gemm(), k + 4, margin, corpus_blocks,
+            max_group_rows, "search_ivf_index",
         )
-        probed = sorted({r["centroid"] for r in probes.select("centroid").distinct().collect()})
-        inv = _inv(probed)
-        cands = _cogroup_gemm_candidates(
-            probes, inv, k, margin, corpus_blocks, max_group_rows
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-        cands = cands.join(q, "query_id")
     else:
-        # broadcast-query regime: route driver-side (the collect is the
-        # max_query_rows-guarded side input above) and run the same numpy
-        # GEMM candidate stage as cosine_topk_ivf over the pruned
-        # partitions — fold-scoring every (query, list-member) pair through
-        # interpreted higher-order functions costs |lists|×|queries|×dim
-        # expression evaluations and was the e≈1.0 hotspot at sf1.
-        packed, probed = _route_queries_driver(queries, id_col, vec_col, cents, n_probe)
-        inv = _inv(probed)
-        cands = _routed_gemm_candidates(inv, packed, k, margin)
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-        cands = cands.join(F.broadcast(q), "query_id")
-    scored = (
-        cands.join(inv.select("neighbor_id", "__cv"), "neighbor_id")
-        .withColumn(
-            "score",
-            F.aggregate(
-                F.zip_with(
-                    F.col("__qv"), F.col("__cv"),
-                    lambda x, y: x.cast("double") * y.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        q = R.side_input(q, max_query_rows, "search_ivf_index", "max_query_rows")
+        routes = route_queries(q, cents, n_probe)
+        inv = lists(sorted(routes))
+        cands = R.scan(inv, q, R.Gemm(), k + 4, margin, routes)
+    return R.exact_topk(
+        cands, q, inv.select("neighbor_id", "__cv"), k, score_decimals
     )
 
 
@@ -550,56 +372,25 @@ def cosine_topk_ivf(
     max_query_rows: int = 100_000,
 ) -> DataFrame:
     """IVF ANN: (query_id, neighbor_id, score, rank) searching only the
-    n_probe nearest inverted lists per query.
-
-    Two-stage scoring (same shape as similarity.cosine_topk): a numpy GEMM
-    per corpus Arrow batch against the probing queries' matrix produces
-    per-query top-(k+4) CANDIDATES (the routing constraint is enforced by
-    grouping the batch by centroid), then only those candidates get the
-    exact sequential-fold rescore (rounded BEFORE ranking when
-    ``score_decimals`` is set) — vs scoring every (query, list-member) pair
-    through interpreted higher-order functions, which costs |lists|×|probing
-    queries|×dim expression evaluations. With n_probe = n_clusters the
-    output is oracle-exact top-k. The query set is a broadcast-sized side
-    input BY CONTRACT — guarded by ``max_query_rows``."""
-    from scio_spark.functions.similarity import (
-        _dot,
-        cut_margin,
-        require_side_input_sized,
-    )
-
-    require_side_input_sized(
-        queries, max_query_rows, "cosine_topk_ivf", "max_query_rows"
+    n_probe nearest inverted lists per query. The query set is a guarded
+    side input (``max_query_rows``), routed driver-side; each corpus Arrow
+    batch is grouped by centroid and GEMM-scored against the queries
+    probing it, and the top-(k+4) candidates are exact-fold rescored and
+    ranked. With n_probe = n_clusters the output is exact top-k."""
+    qs = R.side_input(
+        R.as_queries(queries, id_col, vec_col), max_query_rows,
+        "cosine_topk_ivf", "max_query_rows",
     )
     cents = _centroids(
         corpus, vec_col, n_clusters, seed, sample_fraction, max_iter,
         init_mode, trainer, train_rows_cap,
     )
-    inv = assign_centroid(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")),
-        "__cv",
-        cents,
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cands = R.scan(
+        assign_centroid(c, "__cv", cents), qs, R.Gemm(), k + 4,
+        R.cut_margin(score_decimals), route_queries(qs, cents, n_probe),
     )
-    # Probe routing computed driver-side on the collected (bounded) query
-    # set — same stable-argsort tie-break as probe_centroids.
-    packed, _ = _route_queries_driver(queries, id_col, vec_col, cents, n_probe)
-    margin = cut_margin(score_decimals)
-    cands = _routed_gemm_candidates(inv, packed, k, margin)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    scored = (
-        cands.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("score", _dot(F.col("__qv"), F.col("__cv")))
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return R.exact_topk(cands, qs, c, k, score_decimals)
 
 
 def cosine_topk_ivf_streamed(
@@ -621,58 +412,22 @@ def cosine_topk_ivf_streamed(
     max_group_rows: int = 2_000_000,
 ) -> DataFrame:
     """cosine_topk_ivf for CORPUS-SCALE query workloads: the queries stay
-    a DataFrame end to end — nothing query-sized ever passes through the
-    driver (cosine_topk_ivf collects the query set to route probes, fine
-    for its by-contract-small side-input regime but a funnel when the
-    "queries" are themselves a corpus, e.g. all-pairs retrieval).
-
-    Shape: broadcast only the centroid matrix (n_clusters × dim floats);
-    probe routing runs distributed (probe_centroids mapInPandas — each
-    query row replicated to its n_probe centroid ids); candidates come
-    from a salted centroid-cogrouped numpy GEMM (_cogroup_gemm_candidates
-    — per-task memory bounded by ``corpus_blocks``/``max_group_rows``,
-    ties + rounding margin kept at the cut); the exact sequential-fold
-    rescore then joins both vector sides as ordinary distributed joins —
-    AQE picks broadcast only if a side is genuinely small. Output is
-    identical to cosine_topk_ivf at the same (n_clusters, n_probe):
-    any true top-k candidate is top-k within any subset of its probed
-    list containing it, so the per-block top-(k+4∪ties) union always
-    contains it (parity-pinned in tests/test_ann_streamed.py). The only
-    remaining driver touch is the bounded centroid training sample
-    (train_rows_cap), which is independent of both corpus and query
-    scale."""
-    from scio_spark.functions.similarity import _dot, cut_margin
-
+    a DataFrame end to end — routed distributed (probe_centroids), scored
+    in the core's salted centroid cogroup, rescored through ordinary joins
+    the planner sizes. Only the centroid matrix is broadcast and only the
+    bounded centroid training sample touches the driver. Output equals
+    cosine_topk_ivf at the same (n_clusters, n_probe), pinned in
+    tests/test_ann_streamed.py."""
     cents = _centroids(
         corpus, vec_col, n_clusters, seed, sample_fraction, max_iter,
         init_mode, trainer, train_rows_cap,
     )
-    inv = assign_centroid(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")),
-        "__cv",
-        cents,
+    q = R.as_queries(queries, id_col, vec_col)
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cands = R.cogroup(
+        probe_centroids(q, "__qv", cents, n_probe),
+        assign_centroid(c, "__cv", cents),
+        R.Gemm(), k + 4, R.cut_margin(score_decimals), corpus_blocks,
+        max_group_rows, "cosine_topk_ivf_streamed",
     )
-    probes = probe_centroids(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")),
-        "__qv",
-        cents,
-        n_probe,
-    )
-    cands = _cogroup_gemm_candidates(
-        probes, inv, k, cut_margin(score_decimals), corpus_blocks, max_group_rows
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    scored = (
-        cands.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("score", _dot(F.col("__qv"), F.col("__cv")))
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return R.exact_topk(cands, q, c, k, score_decimals)

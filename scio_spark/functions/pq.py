@@ -6,31 +6,25 @@ quantization for nearest neighbor search", public) splits each vector
 into ``m`` subspaces and learns a 256-entry k-means codebook per
 subspace, so a d-dim float32 vector stores as m BYTES (e.g. 128-dim ×
 4 B → 16 B at m=16 — 32× smaller than float32, vs SQ8's 4×). Search uses
-asymmetric distance computation (ADC): per query, precompute an
+asymmetric distance computation (ADC, the ``Adc`` scorer): per query, an
 m×256 table of query-subvector · codeword dot products; a corpus code's
 approximate score is then m table lookups — no float reconstruction.
 
-Spark shape:
-- **train**: codebooks fit on a BOUNDED collected sample per the IVF
-  quantizer convention (k-means on 256 centroids × m subspaces is
-  sample-sized work; codebooks are m×256×(d/m) floats — a broadcast);
-- **encode**: Arrow-batched numpy over mapInPandas — per batch, one GEMM
-  per subspace against the broadcast codebook, argmax → uint8 codes
-  (binary column, m bytes/vector);
-- **search**: per corpus batch, scores = sum of table[sub, code] lookups
-  (numpy fancy indexing — vectorized, no Python loop per row); top
-  k×oversample candidates per query rescored EXACTLY on the float
-  vectors, so returned scores are exact and quantization only affects
-  candidate recall (pinned in tests).
+Codebooks train on a bounded collected sample (the IVF quantizer
+convention); encoding is one GEMM per subspace per Arrow batch. The
+searches are compositions of the retrieval core (functions/retrieval.py):
+ADC candidates at k·oversample, an exact re-cut where the queries are a
+side input, then the exact float rescore and rank — so returned scores
+are exact and the codes only gate candidate recall (pinned in tests).
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import keep_candidates, require_side_input_sized
+from . import retrieval as R
 
 
 def _kmeans_np(x: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
@@ -100,19 +94,12 @@ def pq_encode(
     """(id, pq_code binary): m bytes per vector — the stored index."""
     import pandas as pd
 
-    m, n_codes, sub = codebooks.shape
     bc = corpus.sparkSession.sparkContext.broadcast(codebooks)
 
     def gen(batches):
         books = bc.value
         for pdf in batches:
-            x = np.array(list(pdf[vec_col]), dtype=np.float32)
-            codes = np.empty((len(x), m), dtype=np.uint8)
-            for j in range(m):
-                xs = x[:, j * sub : (j + 1) * sub]
-                # argmin ||xs - c||² == argmax (xs·c − ||c||²/2)
-                scores = xs @ books[j].T - 0.5 * (books[j] ** 2).sum(1)
-                codes[:, j] = scores.argmax(1)
+            codes = _pq_codes(R._mat(pdf[vec_col], np.float32), books)
             yield pd.DataFrame(
                 {id_col: pdf[id_col], code_col: [c.tobytes() for c in codes]}
             )
@@ -122,143 +109,41 @@ def pq_encode(
     )
 
 
-def _rank_exact(
-    cands: DataFrame,
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    score_decimals: int | None,
-    id_col: str,
-    vec_col: str,
-    broadcast_q: bool = False,
-) -> DataFrame:
-    """Shared final stage of every PQ path: exact deterministic-fold
-    rescore of (query_id, neighbor_id) candidates against the float
-    ``vectors`` table, round-before-rank, top-k per query with the
-    (score desc, neighbor_id asc) tie-break — so returned scores are
-    bit-identical to the DuckDB oracle regardless of which candidate
-    generator (ADC broadcast-queries, streamed, IVF-PQ, stored index)
-    produced them."""
-    from .similarity import _dot
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    if broadcast_q:
-        q = F.broadcast(q)
-    c = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    scored = (
-        cands.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("score", _dot(F.col("__qv"), F.col("__cv")))
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """uint8 PQ codes (rows × m) of a float32 matrix: per subspace, the
+    nearest codeword — argmin ||xs − c||² == argmax (xs·c − ||c||²/2)."""
+    m, _, sub = books.shape
+    codes = np.empty((len(x), m), dtype=np.uint8)
+    for j in range(m):
+        xs = x[:, j * sub : (j + 1) * sub]
+        codes[:, j] = (xs @ books[j].T - 0.5 * (books[j] ** 2).sum(1)).argmax(1)
+    return codes
 
 
-def _gemm_cut(
-    cands: DataFrame,
-    vectors: DataFrame,
-    q_ids: np.ndarray,
-    q_mat64: np.ndarray,
-    k: int,
-    margin: float,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Exact-score candidate cut between the ADC stage and the JVM fold
-    rescore (r16, VERDICT r15 item 3). ADC scores are quantized (their
-    error vs the exact dot is unbounded), so the exhaustive-oracle regime
-    (k·oversample ≥ index rows) keeps EVERY candidate at the ADC cut —
-    |queries| × |index| pairs then flow into the sequential-fold rescore
-    + window, interpreted expression work that runs on however few tasks
-    the index scan produced. This stage attaches the index's float
-    vectors to the candidates (one broadcast hash join — the index side
-    is the by-construction-bounded broadcast), scores them with an EXACT
-    float64 GEMM per Arrow batch, and keeps per (batch × query) the
-    top-(k+4) WITH ties and the rounding margin
-    (similarity.keep_candidates / cut_margin — the same containment
-    argument as the HNSW exact-rescore cut: GEMM-vs-fold drift is covered
-    by cut_margin's two-sided eps and the margin includes a full rounding
-    step, so the final rounded ranking cannot prefer a dropped candidate;
-    the global top-k per query is contained in every batch-local
-    top-(k+ties) union). Volume into the fold rescore drops from
-    |queries| × |index| to ~|queries| × (k + ties)."""
-    import pandas as pd
+class Adc:
+    """PQ asymmetric-distance scorer: a query block is the per-query
+    m × n_codes table of subvector·codeword dots; a corpus block is the
+    rows' codes — stored ``pq_code`` bytes, or ``__cv`` vectors encoded
+    in-task — and a score is m table lookups."""
 
-    from .similarity import keep_candidates as _keep
+    def __init__(self, books: np.ndarray):
+        self.books = books
 
-    bc = vectors.sparkSession.sparkContext.broadcast((q_ids, q_mat64))
-    withvec = cands.join(
-        F.broadcast(
-            vectors.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+    def queries(self, vecs) -> np.ndarray:
+        m, _, sub = self.books.shape
+        q = R._mat(vecs, np.float32)
+        return np.einsum("qjs,jcs->qjc", q.reshape(len(q), m, sub), self.books)
+
+    def corpus(self, pdf) -> np.ndarray:
+        if "pq_code" in pdf:
+            return np.frombuffer(b"".join(pdf["pq_code"]), dtype=np.uint8).reshape(
+                len(pdf), self.books.shape[0]
             )
-        ),
-        "neighbor_id",
-    )
+        return _pq_codes(R._mat(pdf["__cv"], np.float32), self.books)
 
-    def gen(batches):
-        ids, mat = bc.value
-        pos = {int(q): i for i, q in enumerate(ids)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_q, out_n = [], []
-            for qid, grp in pdf.groupby("query_id"):
-                qv = mat[pos[int(qid)]]
-                block = np.array(list(grp["__cv"]), dtype=np.float64)
-                sims = block @ qv
-                kk = min(k + 4, len(sims))
-                sel = _keep(sims, kk, margin)
-                out_q.extend([int(qid)] * len(sel))
-                out_n.extend(grp["neighbor_id"].to_numpy()[sel])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    return withvec.mapInPandas(gen, "query_id long, neighbor_id long")
-
-
-def _adc_candidates(
-    coded: DataFrame,
-    q_ids: np.ndarray,
-    tables: np.ndarray,
-    kk_keep: int,
-    id_col: str,
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """ADC candidate scan for the broadcast-queries regime, over any
-    (id, pq_code) DataFrame — freshly encoded or read back from a stored
-    index (where the scan is column-pruned to m+8 bytes/row). Keeps ties
-    at the k·oversample cut (similarity.keep_candidates) so the candidate
-    SET is partition/batch-order independent."""
-    import pandas as pd
-
-    m = tables.shape[1]
-    bc = coded.sparkSession.sparkContext.broadcast((q_ids, tables))
-
-    def gen(batches):
-        ids, tabs = bc.value
-        for pdf in batches:
-            codes = np.frombuffer(
-                b"".join(pdf[code_col]), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            b_ids = pdf[id_col].to_numpy()
-            # scores[q, row] = Σ_j tabs[q, j, codes[row, j]]
-            sims = tabs[:, np.arange(m)[None, :], codes].sum(-1)
-            out_q, out_n = [], []
-            kk = min(kk_keep + 1, sims.shape[1])
-            for qi in range(sims.shape[0]):
-                idx = keep_candidates(sims[qi], kk, 0.0)
-                keep = idx[b_ids[idx] != ids[qi]]
-                out_q.extend([ids[qi]] * len(keep))
-                out_n.extend(b_ids[keep])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    return coded.mapInPandas(gen, "query_id long, neighbor_id long")
+    def score(self, tabs: np.ndarray, codes: np.ndarray) -> np.ndarray:
+        # scores[q, row] = Σ_j tabs[q, j, codes[row, j]]
+        return tabs[:, np.arange(codes.shape[1])[None, :], codes].sum(-1)
 
 
 def cosine_topk_pq(
@@ -275,18 +160,13 @@ def cosine_topk_pq(
     """Top-k cosine via PQ/ADC candidates + exact float rescore. Output
     contract matches cosine_topk: (query_id, neighbor_id, score, rank)
     with EXACT scores; the m-byte codes only gate candidate recall."""
-    require_side_input_sized(queries, max_query_rows, "cosine_topk_pq", "max_query_rows")
-    m, n_codes, sub = codebooks.shape
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float32)
-    # ADC tables: per query and subspace, dot products against every codeword
-    tables = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), codebooks)
-    coded = pq_encode(corpus, codebooks, vec_col, id_col)
-    cands = _adc_candidates(coded, q_ids, tables, k * oversample, id_col)
-    return _rank_exact(
-        cands, corpus, queries, k, score_decimals, id_col, vec_col, broadcast_q=True
+    qs = R.side_input(
+        R.as_queries(queries, id_col, vec_col), max_query_rows,
+        "cosine_topk_pq", "max_query_rows",
     )
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cands = R.scan(c, qs, Adc(codebooks), k * oversample + 1, 0.0)
+    return R.exact_topk(cands, qs, c, k, score_decimals)
 
 
 def cosine_topk_ivfpq(
@@ -311,66 +191,19 @@ def cosine_topk_ivfpq(
     AND each scored vector costs m byte-lookups instead of d multiplies —
     the two savings are independent and multiply. Output contract matches
     cosine_topk (exact scores on survivors)."""
-    import pandas as pd
+    from .ivf import _centroids, assign_centroid, route_queries
 
-    from .ivf import _centroids, assign_centroid
-
-    require_side_input_sized(
-        queries, max_query_rows, "cosine_topk_ivfpq", "max_query_rows"
+    qs = R.side_input(
+        R.as_queries(queries, id_col, vec_col), max_query_rows,
+        "cosine_topk_ivfpq", "max_query_rows",
     )
-    m, n_codes, sub = codebooks.shape
     cents = _centroids(corpus, vec_col, n_clusters, seed, 1.0)
-    inv = assign_centroid(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")),
-        "__cv",
-        cents,
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cands = R.scan(
+        assign_centroid(c, "__cv", cents), qs, Adc(codebooks),
+        k * oversample + 1, 0.0, route_queries(qs, cents, n_probe),
     )
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([list(r[1]) for r in qrows], dtype=np.float32)
-    tables = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), codebooks)
-    cmat = np.array(cents, dtype=np.float32)
-    p = min(n_probe, len(cents))
-    order = np.argsort(-(q_mat @ cmat.T), axis=1, kind="stable")[:, :p]
-    packed: dict[int, tuple] = {}
-    for c in np.unique(order):
-        rows = np.nonzero((order == c).any(axis=1))[0]
-        packed[int(c)] = (q_ids[rows], tables[rows])
-    bc = corpus.sparkSession.sparkContext.broadcast((packed, codebooks))
-    kk_keep = k * oversample
-
-    def gen(batches):
-        tbl, books = bc.value
-        for pdf in batches:
-            for cen, grp in pdf.groupby("centroid"):
-                hit = tbl.get(int(cen))
-                if hit is None:
-                    continue
-                ids, tabs = hit
-                x = np.array(list(grp["__cv"]), dtype=np.float32)
-                codes = np.empty((len(x), m), dtype=np.uint8)
-                for j in range(m):
-                    xs = x[:, j * sub : (j + 1) * sub]
-                    s = xs @ books[j].T - 0.5 * (books[j] ** 2).sum(1)
-                    codes[:, j] = s.argmax(1)
-                b_ids = grp["neighbor_id"].to_numpy()
-                sims = tabs[:, np.arange(m)[None, :], codes].sum(-1)
-                out_q, out_n = [], []
-                kk = min(kk_keep + 1, sims.shape[1])
-                for qi in range(sims.shape[0]):
-                    # keep ties at the cut (similarity.keep_candidates) so the
-                    # ADC candidate SET is partition/batch-order independent
-                    idx = keep_candidates(sims[qi], kk, 0.0)
-                    keep = idx[b_ids[idx] != ids[qi]]
-                    out_q.extend([ids[qi]] * len(keep))
-                    out_n.extend(b_ids[keep])
-                if out_q:
-                    yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    cands = inv.mapInPandas(gen, "query_id long, neighbor_id long").distinct()
-    return _rank_exact(
-        cands, corpus, queries, k, score_decimals, id_col, vec_col, broadcast_q=True
-    )
+    return R.exact_topk(cands, qs, c, k, score_decimals)
 
 
 def cosine_topk_pq_streamed(
@@ -386,146 +219,22 @@ def cosine_topk_pq_streamed(
 ) -> DataFrame:
     """cosine_topk_pq for CORPUS-SCALE query workloads: queries stay a
     DataFrame end to end. The side-input roles invert — the PQ CODES are
-    the broadcast (m bytes/vector, e.g. 64-dim float32 → 8 B at m=8, a
-    32× shrink, guarded by the row+byte budget), and each query Arrow
-    batch builds its own ADC tables in-task and scans the broadcast code
-    matrix with numpy fancy indexing. Candidates then get the exact
-    distributed fold-rescore; queries never pass through the driver.
-    This is the FAISS deployment shape: the compressed index is the
-    replicated artifact, the query stream is the data. For an index too
-    big even as codes, compose IVF routing instead
+    the guarded side input (m bytes/vector, e.g. 64-dim float32 → 8 B at
+    m=8, a 32× shrink, under the row+byte budget), and each query Arrow
+    batch builds its own ADC tables in-task against the broadcast code
+    matrix. This is the FAISS deployment shape: the compressed index is
+    the replicated artifact, the query stream is the data. For an index
+    too big even as codes, compose IVF routing instead
     (ivf.cosine_topk_ivf_streamed / cosine_topk_ivfpq_streamed)."""
-    import pandas as pd
-
-    m, n_codes, sub = codebooks.shape
-    coded = pq_encode(corpus, codebooks, vec_col, id_col)
-    require_side_input_sized(
-        coded, max_index_rows, "cosine_topk_pq_streamed", "max_index_rows"
+    coded = pq_encode(corpus, codebooks, vec_col, id_col, "pq_code")
+    index = R.side_input(
+        coded.withColumnRenamed(id_col, "neighbor_id"), max_index_rows,
+        "cosine_topk_pq_streamed", "max_index_rows",
     )
-    rows = coded.collect()
-    b_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    codes = np.frombuffer(b"".join(r[1] for r in rows), dtype=np.uint8).reshape(
-        len(rows), m
-    )
-    bc = corpus.sparkSession.sparkContext.broadcast((b_ids, codes, codebooks))
-    kk_keep = k * oversample
-
-    def gen(batches):
-        ids, cds, books = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q_ids = pdf["query_id"].to_numpy()
-            q_mat = np.array(list(pdf["__qv"]), dtype=np.float32)
-            tabs = np.einsum(
-                "qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), books
-            )
-            sims = tabs[:, np.arange(m)[None, :], cds].sum(-1)
-            out_q, out_n = [], []
-            kk = min(kk_keep + 1, sims.shape[1])
-            for qi in range(sims.shape[0]):
-                # keep ties at the cut (similarity.keep_candidates) so the
-                # ADC candidate SET is partition/batch-order independent
-                idx = keep_candidates(sims[qi], kk, 0.0)
-                keep = idx[ids[idx] != q_ids[qi]]
-                out_q.extend([q_ids[qi]] * len(keep))
-                out_n.extend(ids[keep])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    q_in = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    cands = q_in.mapInPandas(gen, "query_id long, neighbor_id long")
-    return _rank_exact(cands, corpus, queries, k, score_decimals, id_col, vec_col)
-
-
-def _cogroup_adc_candidates(
-    probes: DataFrame,
-    inv: DataFrame,
-    books: np.ndarray,
-    kk_keep: int,
-    corpus_blocks: int,
-    max_group_rows: int,
-    what: str,
-    coded: bool = False,
-) -> DataFrame:
-    """Salted centroid-cogrouped ADC candidate stage for streamed-queries
-    IVF-PQ, shared by cosine_topk_ivfpq_streamed (corpus arrives as float
-    vectors in ``__cv``, PQ-encoded in-task) and
-    search_ivfpq_index(streamed=True) (corpus arrives as stored m-byte
-    ``pq_code`` — the column-pruned index scan; ``coded=True``). Per-task
-    memory is bounded per the r14 scale seam: the corpus side is salted
-    to (centroid, pmod(xxhash64(neighbor_id), corpus_blocks)) — one task
-    holds at most Θ(n/(n_clusters·corpus_blocks)) corpus rows — and both
-    group sides fail actionably past ``max_group_rows``. Per-block ADC
-    keep lists can only ADD candidates vs the unsalted per-list cut, so
-    recall is monotone in corpus_blocks and the exhaustive regime is
-    unchanged."""
-    import pandas as pd
-
-    m, n_codes, sub = books.shape
-    bc = probes.sparkSession.sparkContext.broadcast(books)
-
-    def adc(_key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"query_id": [], "neighbor_id": []}).astype("int64")
-        if len(cpdf) > max_group_rows:
-            raise ValueError(
-                f"{what}: inverted-list block for "
-                f"centroid {int(cpdf['centroid'].iloc[0])} has {len(cpdf)} "
-                f"rows > max_group_rows={max_group_rows}; increase "
-                f"corpus_blocks (per-task corpus block is "
-                f"~n/(n_clusters*corpus_blocks) rows) or n_clusters, or "
-                f"raise the cap explicitly"
-            )
-        if len(qpdf) > max_group_rows:
-            raise ValueError(
-                f"{what}: {len(qpdf)} queries routed "
-                f"to centroid {int(qpdf['centroid'].iloc[0])} > "
-                f"max_group_rows={max_group_rows}; increase n_clusters "
-                f"(expected per-centroid query volume is "
-                f"~queries*n_probe/n_clusters; size k ~ sqrt(n)) or raise "
-                f"the cap explicitly"
-            )
-        bks = bc.value
-        q_ids = qpdf["query_id"].to_numpy()
-        q_mat = np.array(list(qpdf["__qv"]), dtype=np.float32)
-        tabs = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), bks)
-        if coded:
-            codes = np.frombuffer(
-                b"".join(cpdf["pq_code"]), dtype=np.uint8
-            ).reshape(len(cpdf), m)
-        else:
-            x = np.array(list(cpdf["__cv"]), dtype=np.float32)
-            codes = np.empty((len(x), m), dtype=np.uint8)
-            for j in range(m):
-                xs = x[:, j * sub : (j + 1) * sub]
-                s = xs @ bks[j].T - 0.5 * (bks[j] ** 2).sum(1)
-                codes[:, j] = s.argmax(1)
-        b_ids = cpdf["neighbor_id"].to_numpy()
-        sims = tabs[:, np.arange(m)[None, :], codes].sum(-1)
-        out_q, out_n = [], []
-        kk = min(kk_keep + 1, sims.shape[1])
-        for qi in range(sims.shape[0]):
-            # keep ties at the cut (similarity.keep_candidates) so the
-            # ADC candidate SET is partition/batch-order independent
-            idx = keep_candidates(sims[qi], kk, 0.0)
-            keep = idx[b_ids[idx] != q_ids[qi]]
-            out_q.extend([q_ids[qi]] * len(keep))
-            out_n.extend(b_ids[keep])
-        return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    B = max(1, corpus_blocks)
-    inv_b = inv.withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(B)).cast("int")
-    )
-    probes_b = probes.withColumn(
-        "__blk", F.explode(F.array(*[F.lit(i) for i in range(B)]))
-    )
-    return (
-        probes_b.groupBy("centroid", "__blk")
-        .cogroup(inv_b.groupBy("centroid", "__blk"))
-        .applyInPandas(adc, "query_id long, neighbor_id long")
+    q = R.as_queries(queries, id_col, vec_col)
+    cands = R.probe(q, index, Adc(codebooks), k * oversample + 1, 0.0)
+    return R.exact_topk(
+        cands, q, R.as_corpus(corpus, id_col, vec_col), k, score_decimals
     )
 
 
@@ -546,41 +255,24 @@ def cosine_topk_ivfpq_streamed(
 ) -> DataFrame:
     """cosine_topk_ivfpq for CORPUS-SCALE query workloads: the full
     FAISS composition with the queries kept as a DataFrame end to end.
-    Broadcasts only the training artifacts (centroids + codebooks —
-    size independent of both corpus and queries); probe routing runs
-    distributed (ivf.probe_centroids), candidates come from a salted
-    centroid-cogrouped task that PQ-encodes its corpus block and scores
-    it against ADC tables built from its probing-query block, and the
-    exact fold-rescore joins both vector sides distributed. The only
-    driver touches are the bounded training samples.
-
-    Per-task memory is bounded the same way as ivf._cogroup_gemm_candidates
-    (VERDICT r14 scale seam): the corpus side is salted to (centroid,
-    pmod(xxhash64(neighbor_id), corpus_blocks)) — one task holds at most
-    Θ(n/(n_clusters·corpus_blocks)) corpus vectors — and both group sides
-    are guarded by ``max_group_rows`` with the matching lever named in the
-    error (n_clusters for the query side, k ~ √n). Per-block ADC keep
-    lists can only ADD candidates vs the unsalted per-list cut, so recall
-    is monotone in corpus_blocks and the exhaustive regime is unchanged."""
+    Only the training artifacts (centroids + codebooks) are broadcast;
+    probe routing runs distributed (ivf.probe_centroids) and candidates
+    come from the core's salted centroid cogroup, which PQ-encodes each
+    corpus block in-task and scores it against ADC tables of its probing
+    queries (per-task memory bounded by ``corpus_blocks`` /
+    ``max_group_rows``, retrieval.cogroup)."""
     from .ivf import _centroids, assign_centroid, probe_centroids
 
     cents = _centroids(corpus, vec_col, n_clusters, seed, 1.0)
-    inv = assign_centroid(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")),
-        "__cv",
-        cents,
-    )
-    probes = probe_centroids(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")),
-        "__qv",
-        cents,
-        n_probe,
-    )
-    cands = _cogroup_adc_candidates(
-        probes, inv, codebooks, k * oversample, corpus_blocks,
+    q = R.as_queries(queries, id_col, vec_col)
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cands = R.cogroup(
+        probe_centroids(q, "__qv", cents, n_probe),
+        assign_centroid(c, "__cv", cents),
+        Adc(codebooks), k * oversample + 1, 0.0, corpus_blocks,
         max_group_rows, "cosine_topk_ivfpq_streamed",
     )
-    return _rank_exact(cands, corpus, queries, k, score_decimals, id_col, vec_col)
+    return R.exact_topk(cands, q, c, k, score_decimals)
 
 
 def build_pq_index(
@@ -648,7 +340,6 @@ def _encode_with_vec(
     the raw vector either way."""
     import pandas as pd
 
-    m, n_codes, sub = books.shape
     vec_type = df.schema[vec_col].dataType.simpleString()
     extra = ", ".join(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in passthrough
@@ -658,14 +349,10 @@ def _encode_with_vec(
     def gen(batches):
         bks, rcents = bc.value
         for pdf in batches:
-            x = np.array(list(pdf[vec_col]), dtype=np.float32)
+            x = R._mat(pdf[vec_col], np.float32)
             if rcents is not None and len(x):
                 x = x - rcents[pdf["centroid"].to_numpy()]
-            codes = np.empty((len(x), m), dtype=np.uint8)
-            for j in range(m):
-                xs = x[:, j * sub : (j + 1) * sub]
-                scores = xs @ bks[j].T - 0.5 * (bks[j] ** 2).sum(1)
-                codes[:, j] = scores.argmax(1)
+            codes = _pq_codes(x, bks)
             out = {
                 id_col: pdf[id_col],
                 "pq_code": [c.tobytes() for c in codes],
@@ -719,82 +406,39 @@ def search_pq_index(
     """Top-k cosine over a PERSISTED PQ index (build_pq_index /
     append_pq_index): ADC candidates from the column-pruned (id, pq_code)
     scan — m+8 bytes per corpus row, never the float vectors — then the
-    shared exact rescore reading the index's vector column for candidate
-    rows only. Output contract matches cosine_topk; with
-    k·oversample ≥ index rows the candidate pass is exhaustive and the
-    result is provably exact top-k (the contract-query regime; at
-    production oversample the recall floor is pinned in tests/test_pq.py).
+    exact rescore reading the index's vector column for candidate rows
+    only. Output contract matches cosine_topk; with k·oversample ≥ index
+    rows the candidate pass is exhaustive and the result is provably
+    exact top-k (the contract-query regime; at production oversample the
+    recall floor is pinned in tests/test_pq.py).
 
-    Two regimes, matching search_ivf_index: default collects the
-    (by-contract bounded, guarded) query set and broadcasts its ADC
-    tables; ``streamed=True`` inverts the side-input roles — the m-byte
-    code matrix is the (row-budgeted) broadcast and the query workload
-    stays a DataFrame end to end, each Arrow batch building its own ADC
-    tables in-task (the corpus-scale query shape; for an index too big
-    even as codes, route through ivf.search_ivf_index instead)."""
-    import pandas as pd
-
+    Default: the query set is the guarded side input (``max_query_rows``)
+    whose ADC tables are broadcast into the code scan, and the ADC
+    candidates get the core's exact re-cut (retrieval.refine) before the
+    fold rescore. ``streamed=True`` inverts the roles — the m-byte code
+    matrix is the guarded side input (``max_index_rows``) and the query
+    workload stays a DataFrame, each Arrow batch building its own ADC
+    tables in-task (for an index too big even as codes, route through
+    search_ivfpq_index instead)."""
     books = load_pq_codebooks(spark, path)
-    m, n_codes, sub = books.shape
     idx = spark.read.parquet(path)
-    coded = idx.select(id_col, "pq_code")
-    kk_keep = k * oversample
-
+    coded = idx.select(F.col(id_col).alias("neighbor_id"), "pq_code")
+    vectors = R.as_corpus(idx, id_col, vec_col)
+    keep = k * oversample + 1
     if streamed:
-        require_side_input_sized(
-            coded, max_index_rows, "search_pq_index", "max_index_rows"
+        index = R.side_input(coded, max_index_rows, "search_pq_index", "max_index_rows")
+        q = R.as_queries(queries, id_col, vec_col)
+        cands = R.probe(q, index, Adc(books), keep, 0.0)
+    else:
+        q = R.side_input(
+            R.as_queries(queries, id_col, vec_col), max_query_rows,
+            "search_pq_index", "max_query_rows",
         )
-        rows = coded.collect()
-        b_ids = np.array([r[0] for r in rows], dtype=np.int64)
-        codes = np.frombuffer(
-            b"".join(r[1] for r in rows), dtype=np.uint8
-        ).reshape(len(rows), m)
-        bc = spark.sparkContext.broadcast((b_ids, codes, books))
-
-        def gen(batches):
-            ids, cds, bks = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                q_ids = pdf["query_id"].to_numpy()
-                q_mat = np.array(list(pdf["__qv"]), dtype=np.float32)
-                tabs = np.einsum(
-                    "qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), bks
-                )
-                sims = tabs[:, np.arange(m)[None, :], cds].sum(-1)
-                out_q, out_n = [], []
-                kk = min(kk_keep + 1, sims.shape[1])
-                for qi in range(sims.shape[0]):
-                    sel = keep_candidates(sims[qi], kk, 0.0)
-                    keep = sel[ids[sel] != q_ids[qi]]
-                    out_q.extend([q_ids[qi]] * len(keep))
-                    out_n.extend(ids[keep])
-                yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-        q_in = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        cands = R.refine(
+            R.scan(coded, q, Adc(books), keep, 0.0), q, vectors, k,
+            R.cut_margin(score_decimals),
         )
-        cands = q_in.mapInPandas(gen, "query_id long, neighbor_id long")
-        return _rank_exact(cands, idx, queries, k, score_decimals, id_col, vec_col)
-
-    require_side_input_sized(
-        queries, max_query_rows, "search_pq_index", "max_query_rows"
-    )
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float32)
-    tables = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), books)
-    cands = _adc_candidates(coded, q_ids, tables, kk_keep, id_col)
-    from .similarity import cut_margin
-
-    cands = _gemm_cut(
-        cands, idx,
-        q_ids, np.array([r[1] for r in qrows], dtype=np.float64),
-        k, cut_margin(score_decimals), id_col, vec_col,
-    )
-    return _rank_exact(
-        cands, idx, queries, k, score_decimals, id_col, vec_col, broadcast_q=True
-    )
+    return R.exact_topk(cands, q, vectors, k, score_decimals)
 
 
 def build_ivfpq_index(
@@ -923,104 +567,46 @@ def search_ivfpq_index(
     """Top-k cosine over a persisted IVF-PQ index: probe routing prunes
     to n_probe centroid PARTITIONS, ADC candidates come from the
     column-pruned (id, centroid, pq_code) scan of those partitions alone,
-    and the shared exact rescore reads the vector column for candidate
-    rows of the probed partitions only. With n_probe = n_clusters and
+    and the exact rescore reads the vector column for candidate rows of
+    the probed partitions only. With n_probe = n_clusters and
     k·oversample ≥ the largest inverted list the result is provably
     exact top-k (the contract-query regime).
 
-    Default regime collects the (guarded) query set, routes it
-    driver-side and broadcasts per-centroid ADC tables;
-    ``streamed=True`` keeps queries a DataFrame end to end — distributed
-    probe routing (ivf.probe_centroids) + the salted, memory-bounded
-    centroid cogroup (_cogroup_adc_candidates with the stored codes), so
-    only the two training artifacts are ever broadcast."""
-    import pandas as pd
+    Default: the query set is the guarded side input, routed driver-side
+    into per-centroid ADC tables, and the candidates get the exact re-cut
+    as in search_pq_index. ``streamed=True`` keeps queries a DataFrame
+    end to end — distributed probe routing (ivf.probe_centroids) + the
+    core's salted centroid cogroup over the stored codes, so only the two
+    training artifacts are ever broadcast."""
+    from .ivf import probe_centroids, probed_centroids, route_queries
 
-    from .ivf import probe_centroids
-
-    # residual mode changes only how codes were TRAINED/encoded; ADC
-    # tables and every per-list cut work identically (build_ivfpq_index
-    # docstring), so the flag is loaded but needs no branch here.
+    # residual mode changes only how codes were TRAINED/encoded; within one
+    # inverted list q·x and the residual-ADC estimate differ by a per-list
+    # constant and every cut here is per list, so search needs no branch.
     cents, books, _residual = _load_ivfpq_meta(spark, path)
-    m, n_codes, sub = books.shape
-    kk_keep = k * oversample
+    keep = k * oversample + 1
 
-    def _pruned(probed):
-        return spark.read.parquet(path).filter(
-            F.col("centroid").isin(list(probed))
-        )
+    def lists(probed):
+        return spark.read.parquet(path).filter(F.col("centroid").isin(list(probed)))
 
+    q = R.as_queries(queries, id_col, vec_col)
     if streamed:
-        probes = probe_centroids(
-            queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-            ),
-            "__qv",
-            cents,
-            n_probe,
+        probes = probe_centroids(q, "__qv", cents, n_probe)
+        idx = lists(probed_centroids(probes))
+        coded = idx.select(F.col(id_col).alias("neighbor_id"), "pq_code", "centroid")
+        cands = R.cogroup(
+            probes, coded, Adc(books), keep, 0.0, corpus_blocks,
+            max_group_rows, "search_ivfpq_index",
         )
-        probed = sorted(
-            {r["centroid"] for r in probes.select("centroid").distinct().collect()}
+    else:
+        q = R.side_input(q, max_query_rows, "search_ivfpq_index", "max_query_rows")
+        routes = route_queries(q, cents, n_probe)
+        idx = lists(sorted(routes))
+        coded = idx.select(F.col(id_col).alias("neighbor_id"), "centroid", "pq_code")
+        cands = R.refine(
+            R.scan(coded, q, Adc(books), keep, 0.0, routes), q,
+            R.as_corpus(idx, id_col, vec_col), k, R.cut_margin(score_decimals),
         )
-        idx = _pruned(probed)
-        inv = idx.select(
-            F.col(id_col).alias("neighbor_id"), "pq_code", "centroid"
-        )
-        cands = _cogroup_adc_candidates(
-            probes, inv, books, kk_keep, corpus_blocks, max_group_rows,
-            "search_ivfpq_index", coded=True,
-        )
-        return _rank_exact(cands, idx, queries, k, score_decimals, id_col, vec_col)
-
-    require_side_input_sized(
-        queries, max_query_rows, "search_ivfpq_index", "max_query_rows"
-    )
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float32)
-    tables = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_mat), m, sub), books)
-    cmat = np.array(cents, dtype=np.float32)
-    p = min(n_probe, len(cents))
-    order = np.argsort(-(q_mat @ cmat.T), axis=1, kind="stable")[:, :p]
-    packed: dict[int, tuple] = {}
-    for c in np.unique(order):
-        rows = np.nonzero((order == c).any(axis=1))[0]
-        packed[int(c)] = (q_ids[rows], tables[rows])
-    idx = _pruned(sorted(packed))
-    coded = idx.select(id_col, "centroid", "pq_code")
-    bc = spark.sparkContext.broadcast(packed)
-
-    def gen(batches):
-        tbl = bc.value
-        for pdf in batches:
-            for cen, grp in pdf.groupby("centroid"):
-                hit = tbl.get(int(cen))
-                if hit is None:
-                    continue
-                ids, tabs = hit
-                codes = np.frombuffer(
-                    b"".join(grp["pq_code"]), dtype=np.uint8
-                ).reshape(len(grp), m)
-                b_ids = grp[id_col].to_numpy()
-                sims = tabs[:, np.arange(m)[None, :], codes].sum(-1)
-                out_q, out_n = [], []
-                kk = min(kk_keep + 1, sims.shape[1])
-                for qi in range(sims.shape[0]):
-                    sel = keep_candidates(sims[qi], kk, 0.0)
-                    keep = sel[b_ids[sel] != ids[qi]]
-                    out_q.extend([ids[qi]] * len(keep))
-                    out_n.extend(b_ids[keep])
-                if out_q:
-                    yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    cands = coded.mapInPandas(gen, "query_id long, neighbor_id long")
-    from .similarity import cut_margin
-
-    cands = _gemm_cut(
-        cands, idx,
-        q_ids, np.array([r[1] for r in qrows], dtype=np.float64),
-        k, cut_margin(score_decimals), id_col, vec_col,
-    )
-    return _rank_exact(
-        cands, idx, queries, k, score_decimals, id_col, vec_col, broadcast_q=True
+    return R.exact_topk(
+        cands, q, R.as_corpus(idx, id_col, vec_col), k, score_decimals
     )

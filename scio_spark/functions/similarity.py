@@ -2,200 +2,34 @@
 
 Reference analog: scio's ANN side inputs — Annoy (scio-extra annoy/package.scala)
 and Voyager/HNSW (scio-extra voyager/syntax/SCollectionSyntax.scala:47-215) —
-broadcast an index and look up per element. Spark-first re-expression:
+broadcast an index and look up per element. The top-k searches here are
+compositions of the retrieval core (functions/retrieval.py: guard, place,
+candidate cut, exact rescore and rank); the containment argument that
+makes their cuts exact lives there. This module adds the candidate
+generators:
 
-- **brute-force cosine top-k** (the correctness baseline): query-set ⋈ corpus
-  with a JVM-side `aggregate(zip_with(...))` dot product. For a broadcast-sized
-  query set this is a single corpus scan — no shuffle of the corpus — and
-  whole-stage-codegen'd (no Python).
-- **LSH-bucketed top-k** (the scale path): random-hyperplane signs bucket both
-  sides; only same-bucket pairs are scored. Hyperplanes are derived
-  deterministically from md5 so plans are reproducible. With b-bit signatures
-  the corpus scan fans out b× less than brute force at equal recall targets.
-- **HNSW broadcast index** (``cosine_topk_hnsw``): real Voyager parity —
-  corpus → in-memory HNSW graph side input (pure-numpy, functions/hnsw.py),
-  broadcast once, probed per Arrow batch. No native dependency; the
-  exhaustive regime (``ef_search >= n`` + ``exact_rescore``) is provably
-  exact, which is what the ann_hnsw contract query pins against SQL.
+- **brute-force GEMM** (``cosine_topk``, the correctness baseline) and its
+  int8 sibling (``cosine_topk_sq8``, the ``Sq8`` scorer);
+- **hyperplane LSH buckets** (``cosine_topk_lsh``): md5-derived planes, so
+  plans are reproducible; only same-bucket pairs are scored;
+- **HNSW beams** (``cosine_topk_hnsw`` / ``_sharded``): Voyager parity on a
+  pure-numpy graph (functions/hnsw.py); ``ef_search=None`` is exhaustive
+  and, with ``exact_rescore``, exact;
+- the embedding near-dup family (exact block-pair GEMM, banded LSH,
+  incremental staged index), which thresholds instead of ranking.
 
 Embeddings in the fixture are L2-normalized, so cosine == dot product.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dot(a, b):
-    """Sequential left-fold dot product in double — deterministic and
-    identical to the DuckDB oracle's ordered SUM."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def cut_margin(score_decimals: int | None, gemm_eps: float = 1e-9) -> float:
-    """Safety margin for a candidate cut whose scores feed a downstream
-    ``F.round(score, score_decimals)`` before final ranking.
-
-    Two kept candidates f and a dropped one e satisfy
-    rounded(f) − rounded(e) >= (raw_f − raw_e) − 10^-d  (round-half-even
-    moves each value by at most half a step, in opposite directions at
-    worst), so dropping only rows more than a FULL step + float-drift eps
-    below the cut guarantees every kept candidate strictly outranks every
-    dropped one after rounding — the containment argument survives the
-    rounding (ADVICE r14: the 0.399996-cosine class found at sf1).
-    The eps term is 2×gemm_eps (ADVICE r15): the kept-vs-dropped compare
-    is between two RESCORED values, each of which can drift from its GEMM
-    score by up to gemm_eps in opposite directions — the margin now
-    matches the two-sided bound instead of assuming one-sided drift.
-    (Real float64 GEMM-vs-fold drift is ~1e-12, far under either bound;
-    widening the margin only ever keeps MORE candidates, so results are
-    unchanged by containment.)"""
-    if score_decimals is None:
-        return 2.0 * gemm_eps
-    return 10.0 ** -score_decimals + 2.0 * gemm_eps
-
-
-def keep_candidates(row, kk: int, margin: float):
-    """Indices of all entries of ``row`` scoring >= (kk-th largest − margin).
-
-    Replaces a bare ``np.argpartition(-row, kk-1)[:kk]`` cut at every ANN
-    candidate stage: argpartition breaks ties in ARBITRARY (memory-layout)
-    order, so with >= kk tied or near-tied scores a true top-k row (the
-    smallest neighbor_id among ties under the final deterministic ordering)
-    could be silently dropped. Keeping everything at-or-within-margin-of
-    the threshold makes the candidate SET a pure function of the score
-    multiset — independent of row order, partitioning, and Arrow batch
-    boundaries — and (with ``cut_margin``) of downstream rounding. Worst
-    case (all scores tied) this keeps the whole block: correctness over a
-    tighter cut; callers bound block size upstream (corpus_blocks /
-    max_group_rows)."""
-    import numpy as np
-
-    if kk >= len(row):
-        return np.arange(len(row))
-    t = np.partition(row, len(row) - kk)[len(row) - kk]
-    return np.nonzero(row >= t - margin)[0]
-
-
-#: Byte budget for driver-collected side inputs. A row cap alone lets a
-#: wide-row input (long documents, fat embeddings) bloat the driver while
-#: staying under the row count — so the guard also sums approximate
-#: serialized bytes and fails actionably past this budget.
-SIDE_INPUT_MAX_BYTES = 2 << 30  # 2 GiB
-
-
-def _approx_row_bytes(df: DataFrame):
-    """Column: approximate in-memory bytes of one row — octet_length for
-    string/binary, JSON length for nested types (over-estimates ~4/3 on
-    binary-in-array, fine for a budget), 8 for scalars, +16 overhead."""
-    from pyspark.sql import types as T
-
-    out = F.lit(16)
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, (T.StringType, T.BinaryType)):
-            out = out + F.coalesce(F.octet_length(c), F.lit(0))
-        elif isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-            out = out + F.coalesce(
-                F.octet_length(F.to_json(F.struct(c))), F.lit(0)
-            )
-        else:
-            out = out + F.lit(8)
-    return out
-
-
-#: Rows used to estimate mean row bytes for the budget check below.
-SIDE_INPUT_BYTE_SAMPLE = 4096
-
-
-def require_side_input_sized(
-    df: DataFrame,
-    max_rows: int,
-    what: str,
-    knob: str,
-    max_bytes: int | None = SIDE_INPUT_MAX_BYTES,
-):
-    """Driver-collect guard: a by-contract-small side input that is actually
-    big must fail with an actionable error, not an executor/driver OOM.
-
-    Two cheap checks, both capped so the guard stays O(1)-ish even when
-    the input is huge: (1) a column-pruned ``limit(max_rows+1).count()``
-    for the row cap; (2) a byte budget ESTIMATED from a seeded Bernoulli
-    sample of ~``SIDE_INPUT_BYTE_SAMPLE`` rows' approximate serialized
-    size (octet_length / to_json), extrapolated to the observed row
-    count — evaluating the byte expression over every row of a
-    multi-million-row side input on every build would cost a full-width
-    scan per guard call (inputs at or under the sample size are summed
-    exactly). The budget is a driver-OOM guard, not an exact accountant:
-    to_json over-estimates nested binary ~4/3 and a random sample can
-    still miss a pathological byte skew; callers with legitimately huge-but-fits
-    inputs pass ``max_bytes=None`` alongside a raised row cap.
-    ``max_bytes`` defaults ON (SIDE_INPUT_MAX_BYTES = 2 GiB) for every
-    caller — a deliberate behavior change from the pre-r13 rows-only
-    guard."""
-    if max_bytes is None:
-        n = df.limit(max_rows + 1).count()
-        if n > max_rows:
-            raise ValueError(
-                f"{what}: the query set has >{max_rows} rows but is "
-                f"collected/broadcast as a side input by this operator. "
-                f"Reduce the query set, or raise {knob} if the driver "
-                f"genuinely has the memory."
-            )
-        return
-    # ONE bounded job for both checks (r16, VERDICT r15 item 8: the r15
-    # Bernoulli-sample rewrite paid a row-cap count job PLUS a second
-    # full-width sample scan per guard call): count the (max_rows+1)-capped
-    # input and sum approximate bytes over a seeded Bernoulli subset in the
-    # same aggregation. The byte expression only evaluates on sampled rows
-    # (lazy CASE WHEN); the sample stays unbiased (rand is row-position
-    # independent, unlike the pre-r15 order-biased limit() head). The rate
-    # keys off max_rows (known before the scan): callers with caps at or
-    # under 2×SIDE_INPUT_BYTE_SAMPLE sum exactly (rate 1.0); the
-    # big-cap callers sample ~2·SIDE_INPUT_BYTE_SAMPLE/max_rows of their
-    # rows. An empty sample over a non-empty input (tiny n under a huge
-    # cap) falls back to one exact, still row-capped, aggregation.
-    q = min(1.0, 2.0 * SIDE_INPUT_BYTE_SAMPLE / max(max_rows, 1))
-    row = (
-        df.limit(max_rows + 1)
-        .withColumn("__samp", F.rand(7) < q)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col("__samp"), _approx_row_bytes(df))
-            ).alias("b"),
-            F.count(F.when(F.col("__samp"), F.lit(1))).alias("bn"),
-        )
-        .collect()[0]
-    )
-    n = row["n"]
-    if n > max_rows:
-        raise ValueError(
-            f"{what}: the query set has >{max_rows} rows but is collected/"
-            f"broadcast as a side input by this operator. Reduce the query "
-            f"set, or raise {knob} if the driver genuinely has the memory."
-        )
-    if n:
-        b, bn = row["b"], row["bn"]
-        if not bn:
-            ex = df.limit(n).agg(
-                F.sum(_approx_row_bytes(df)).alias("b")
-            ).collect()[0]
-            b, bn = ex["b"], n
-        est = int((b or 0) / max(bn, 1) * n)
-        if est > max_bytes:
-            raise ValueError(
-                f"{what}: ~{est >> 20} MiB (estimated from a sample of "
-                f"{bn} rows) exceeds the {max_bytes >> 20} MiB "
-                f"side-input byte budget (rows are within the {knob} cap "
-                f"but too wide). Reduce the input, or raise max_bytes if "
-                f"the driver genuinely has the memory."
-            )
+from . import retrieval as R
+from .retrieval import _dot
 
 
 def cosine_topk(
@@ -210,66 +44,19 @@ def cosine_topk(
     """Exact top-k by cosine for each query vector (vectors pre-normalized ⇒
     dot product): (query_id, neighbor_id, score, rank).
 
-    Plan shape: broadcast(queries) ⋈ corpus (no corpus shuffle), then a
-    top-k window partitioned by query — AQE sizes the single shuffle. The
-    query set is a broadcast-sized side input BY CONTRACT — guarded by
-    ``max_query_rows`` (for corpus-scale query sets use the LSH/IVF paths,
-    which never collect)."""
-    import numpy as np
-    import pandas as pd
-
-    require_side_input_sized(
-        queries, max_query_rows, "cosine_topk", "max_query_rows"
+    The query set is a side input BY CONTRACT, guarded by
+    ``max_query_rows`` (corpus-scale query sets belong to the LSH/IVF
+    paths, which never collect). Each corpus Arrow batch is GEMM-scored
+    against the broadcast queries, cut to top-(k+4) with ties and
+    ``cut_margin``, and the candidates are fold-rescored and ranked: one
+    corpus scan, no corpus shuffle."""
+    qs = R.side_input(
+        R.as_queries(queries, id_col, vec_col), max_query_rows,
+        "cosine_topk", "max_query_rows",
     )
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-
-    # Stage 1 — GEMM candidates: per corpus Arrow batch, block × queriesᵀ;
-    # keep per-query top-(k+4) with ties and the rounding margin included
-    # (keep_candidates/cut_margin — GEMM-vs-fold error is ~1e-14 and the
-    # final ranking rounds when score_decimals is set, so the exact top-k
-    # cannot be outside the candidate set).
-    margin = cut_margin(score_decimals)
-
-    def gen(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            block = np.array(list(pdf[vec_col]), dtype=np.float64)
-            b_ids = pdf[id_col].to_numpy()
-            sims = mat @ block.T  # queries × block
-            out_q, out_n = [], []
-            kk = min(k + 4, sims.shape[1])
-            for qi in range(sims.shape[0]):
-                idx = keep_candidates(sims[qi], kk, margin)
-                keep = idx[b_ids[idx] != ids[qi]]
-                out_q.extend([ids[qi]] * len(keep))
-                out_n.extend(b_ids[keep])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    cands = corpus.select(id_col, vec_col).mapInPandas(
-        gen, "query_id long, neighbor_id long"
-    )
-    # Stage 2 — exact sequential-fold rescore of candidates only, then the
-    # global per-query top-k (candidates from every corpus block compete).
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    scored = (
-        cands.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("score", _dot(F.col("__qv"), F.col("__cv")))
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cands = R.scan(c, qs, R.Gemm(), k + 4, R.cut_margin(score_decimals))
+    return R.exact_topk(cands, qs, c, k, score_decimals)
 
 
 def quantize_embeddings(
@@ -295,6 +82,18 @@ def quantize_embeddings(
     return df.withColumn(scale_col, s.cast("float")).withColumn(code_col, code)
 
 
+class Sq8(R.Gemm):
+    """Scorer over SQ8 codes: float32 queries · corpus vectors
+    reconstructed from (code, scale) — a quarter of the float scan bytes."""
+
+    def queries(self, vecs):
+        return R._mat(vecs, np.float32)
+
+    def corpus(self, pdf):
+        scales = pdf["scale"].to_numpy(dtype=np.float32) / 127.0
+        return R._mat(pdf["code"], np.float32) * scales[:, None]
+
+
 def cosine_topk_sq8(
     corpus: DataFrame,
     queries: DataFrame,
@@ -312,56 +111,14 @@ def cosine_topk_sq8(
     vectors, so returned scores are exact; quantization only risks recall
     at the candidate boundary (pinned ≥0.95@k in tests). Same output
     contract as ``cosine_topk``: (query_id, neighbor_id, score, rank)."""
-    import numpy as np
-    import pandas as pd
-
-    require_side_input_sized(
-        queries, max_query_rows, "cosine_topk_sq8", "max_query_rows"
+    qs = R.side_input(
+        R.as_queries(queries, id_col, vec_col), max_query_rows,
+        "cosine_topk_sq8", "max_query_rows",
     )
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float32)
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-    kk_keep = k * oversample
-
-    qz = quantize_embeddings(corpus.select(id_col, vec_col), vec_col).drop(vec_col)
-
-    def gen(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            codes = np.array(list(pdf["code"]), dtype=np.float32)
-            scales = pdf["scale"].to_numpy(dtype=np.float32) / 127.0
-            block = codes * scales[:, None]  # reconstructed int8 corpus
-            b_ids = pdf[id_col].to_numpy()
-            sims = mat @ block.T
-            out_q, out_n = [], []
-            kk = min(kk_keep + 1, sims.shape[1])
-            for qi in range(sims.shape[0]):
-                # ties at the cut are all kept (keep_candidates) so the
-                # candidate SET is batch/partition-order independent; the
-                # SQ8 scores are approximate anyway, so no rounding margin
-                idx = keep_candidates(sims[qi], kk, 0.0)
-                keep = idx[b_ids[idx] != ids[qi]]
-                out_q.extend([ids[qi]] * len(keep))
-                out_n.extend(b_ids[keep])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-
-    cands = qz.mapInPandas(gen, "query_id long, neighbor_id long")
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    scored = (
-        cands.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("score", _dot(F.col("__qv"), F.col("__cv")))
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    c = R.as_corpus(corpus, id_col, vec_col)
+    qz = quantize_embeddings(c, "__cv").drop("__cv")
+    cands = R.scan(qz, qs, Sq8(), k * oversample + 1, 0.0)
+    return R.exact_topk(cands, qs, c, k, score_decimals)
 
 
 def _exact_rescore(
@@ -418,9 +175,6 @@ def embedding_dedup_pairs(
        O(n²), the LSH variant below is the sub-quadratic path.
     2. exact rescoring via the shared deterministic fold.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     margin = _dedup_margin(threshold, score_decimals)
     B = num_blocks
@@ -494,9 +248,6 @@ def band_signatures(
     the staged index, and the incremental path so all three band
     identically."""
     import hashlib
-
-    import numpy as np
-    import pandas as pd
 
     nbits = bands * band_bits
     planes = np.array(
@@ -799,9 +550,6 @@ def _bucket_gemm_candidates(
     per-bucket cap; expected per-task memory is
     Θ(target_rows · dim + hot-bucket tail), the tail still bounded by
     ``max_bucket_rows``."""
-    import numpy as np
-    import pandas as pd
-
     empty = pd.DataFrame({"id_1": pd.Series(dtype="int64"),
                           "id_2": pd.Series(dtype="int64")})
 
@@ -910,25 +658,16 @@ def cosine_topk_lsh(
     one bucket = exact brute force, which makes the output oracle-matchable).
     Scores from the deterministic fold, rounded before ranking when
     ``score_decimals`` is set."""
-    csig = hyperplane_signature(corpus, id_col, vec_col, bits, dim).withColumnRenamed(
-        id_col, "neighbor_id"
+    csig = hyperplane_signature(
+        R.as_corpus(corpus, id_col, vec_col), "neighbor_id", "__cv", bits, dim
     )
-    qsig = hyperplane_signature(queries, id_col, vec_col, bits, dim).withColumnRenamed(
-        id_col, "query_id"
+    qsig = hyperplane_signature(
+        R.as_queries(queries, id_col, vec_col), "query_id", "__qv", bits, dim
     )
-    scored = (
-        csig.join(F.broadcast(qsig.withColumnRenamed(vec_col, "__qv")), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", _dot(F.col("__qv"), F.col(vec_col)))
+    pairs = csig.join(qsig, "bucket").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return R.fold_topk(pairs, k, score_decimals)
 
 
 def cosine_topk_hnsw(
@@ -960,126 +699,58 @@ def cosine_topk_hnsw(
 
     ``ef_search=None`` means exhaustive (ef = corpus size): the beam
     visits every node (hnsw.py guarantees layer-0 connectivity), so the
-    candidate set provably contains the exact top-k. With
-    ``exact_rescore=True`` the Python side emits only candidate PAIRS and
-    the scoring/ranking runs JVM-side with the deterministic sequential
-    fold + round-before-rank — exactly reproducible in the DuckDB oracle
-    (the exact-regime-for-the-oracle pattern of q_ann_ivf). Recall of the
+    candidate set contains the exact top-k. With ``exact_rescore=True``
+    the beam candidates go through the core's exact rescore and rank —
+    exactly reproducible in the DuckDB oracle; otherwise they are ranked
+    on their beam scores. Recall of the
     approximate regime is pinned in tests/test_hnsw.py."""
     import pickle
 
-    import numpy as np
-    import pandas as pd
+    from scio_spark.functions.hnsw import build_hnsw
 
-    from scio_spark.functions.hnsw import build_hnsw, search_hnsw
-
-    require_side_input_sized(
-        corpus, max_corpus_rows, "cosine_topk_hnsw", "max_corpus_rows"
+    cs = R.side_input(
+        R.as_corpus(corpus, id_col, vec_col), max_corpus_rows,
+        "cosine_topk_hnsw", "max_corpus_rows",
     )
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    index = build_hnsw(mat, m=m, ef_construction=ef_construction)
-    ef = index.n if ef_search is None else max(ef_search, k + 2)
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        pickle.dumps((ids, index))
+    index = build_hnsw(
+        R._mat(cs.rows["__cv"], np.float64), m=m, ef_construction=ef_construction
     )
+    bc = corpus.sparkSession.sparkContext.broadcast(pickle.dumps((cs.ids, index)))
 
     def gen(batches):
         c_ids, idx = pickle.loads(bc.value)
-        id_of = {int(v): j for j, v in enumerate(c_ids)}
         for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for q_id, vec in zip(pdf[id_col], pdf[vec_col]):
-                q_id = int(q_id)
-                self_row = id_of.get(q_id, -1)
-                # k+1 then drop the self-match of a corpus-resident query
-                found = search_hnsw(
-                    idx, np.asarray(vec, np.float64), min(k + 1, idx.n), ef
+            if len(pdf):
+                yield _hnsw_cut(
+                    idx, c_ids, pdf, k, ef_search, exact_rescore, score_decimals
                 )
-                rank = 0
-                for s, row in found:
-                    if row == self_row:
-                        continue
-                    rank += 1
-                    if rank > k:
-                        break
-                    out.append((q_id, int(c_ids[row]), s, rank))
-            yield pd.DataFrame(
-                out, columns=["query_id", "neighbor_id", "score", "rank"]
-            )
 
-    margin = cut_margin(score_decimals)
-
-    def gen_pairs(batches):
-        c_ids, idx = pickle.loads(bc.value)
-        id_of = {int(v): j for j, v in enumerate(c_ids)}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for q_id, vec in zip(pdf[id_col], pdf[vec_col]):
-                q_id = int(q_id)
-                self_row = id_of.get(q_id, -1)
-                found = search_hnsw(
-                    idx, np.asarray(vec, np.float64), ef, ef
-                )
-                # Candidate cut before the JVM rescore (guide §2.3 —
-                # decide with small rows): only rows that can still rank
-                # top-k after round(score, score_decimals) survive.
-                # keep_candidates + cut_margin keep every row within a
-                # full rounding step (+ float drift) of the k-th beam
-                # score, so the rescored top-k is IDENTICAL to rescoring
-                # the whole beam — previously the exhaustive regime
-                # emitted the entire corpus per query (|queries|·n pairs)
-                # into the fold-dot + window rank.
-                sims = np.fromiter((s for s, _ in found), np.float64, len(found))
-                rows = np.fromiter((r for _, r in found), np.int64, len(found))
-                nonself = rows != self_row
-                sims, rows = sims[nonself], rows[nonself]
-                out.extend(
-                    (q_id, int(c_ids[r]))
-                    for r in rows[keep_candidates(sims, k, margin)]
-                )
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id"])
-
-    qsel = queries.select(id_col, vec_col)
+    q = R.as_queries(queries, id_col, vec_col)
+    cands = q.mapInPandas(gen, R.PAIRS + ", score double")
     if not exact_rescore:
-        out = qsel.mapInPandas(
-            gen, "query_id long, neighbor_id long, score double, rank int"
-        )
-        if score_decimals is not None:
-            out = out.withColumn("score", F.round("score", score_decimals))
-        return out
+        return R.rank_topk(cands, k, score_decimals)
+    return R.exact_topk(cands.drop("score"), q, cs, k, score_decimals)
 
-    cands = qsel.mapInPandas(gen_pairs, "query_id long, neighbor_id long")
-    qv = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-    )
-    cv = F.broadcast(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-        )
-    )
-    scored = (
-        cands.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("score", _dot(F.col("__qv"), F.col("__cv")))
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+
+def _hnsw_cut(index, c_ids, qpdf, k, ef_search, exact, score_decimals):
+    """HNSW candidate generator: beam-search each (query_id, __qv) row of
+    ``qpdf``, then the shared cut → (query_id, neighbor_id, beam score).
+    For an exact rescore the whole ef-beam goes through the cut with
+    ``cut_margin`` (containment, functions/retrieval.py); otherwise the
+    top k+1 beam rows are kept and ranked on their beam scores."""
+    from scio_spark.functions.hnsw import search_hnsw
+
+    ef = index.n if ef_search is None else max(ef_search, k + 2)
+    n_keep = ef if exact else min(k + 1, index.n)
+
+    def beams():
+        for q_id, vec in zip(qpdf["query_id"].to_numpy(), qpdf["__qv"]):
+            found = search_hnsw(index, np.asarray(vec, np.float64), n_keep, ef)
+            sims = np.fromiter((s for s, _ in found), np.float64, len(found))
+            rows = np.fromiter((r for _, r in found), np.int64, len(found))
+            yield q_id, sims, c_ids[rows]
+
+    return R.cut(beams(), k + 1, R.cut_margin(score_decimals), scores=True)
 
 
 def cosine_topk_hnsw_sharded(
@@ -1105,16 +776,13 @@ def cosine_topk_hnsw_sharded(
     driver) and probes its replicated query block. Nothing corpus- or
     query-sized touches the driver or a broadcast.
 
-    Merge argument: each query's true global top-k rows are each top-k
-    WITHIN their own shard, so the union of per-shard top-k candidates
-    contains the global top-k — in the exhaustive regime
-    (``ef_search=None`` ⇒ per-shard beam = shard size, layer-0
-    connectivity guaranteed by hnsw._repair_connectivity) the output is
-    provably exact, and with ``exact_rescore=True`` scoring/ranking runs
-    JVM-side with the deterministic fold + round-before-rank (the oracle
-    regime; parity with cosine_topk pinned in tests/test_hnsw.py). In the
-    approximate regime recall equals the per-shard HNSW recall — shards
-    only SHRINK each graph, which helps beam recall at fixed ef.
+    Shards are blocks of the corpus, so the per-shard cuts contain the
+    global top-k (containment, functions/retrieval.py): with
+    ``ef_search=None`` (per-shard beam = shard size) and
+    ``exact_rescore=True`` the output is exact (parity with cosine_topk
+    pinned in tests/test_hnsw.py). In the approximate regime recall equals
+    the per-shard HNSW recall — shards only SHRINK each graph, which helps
+    beam recall at fixed ef.
 
     Per-task memory is Θ(n/n_shards + |queries|): size n_shards to the
     corpus (the semdedup k ~ √n discipline) and keep the query workload
@@ -1123,27 +791,19 @@ def cosine_topk_hnsw_sharded(
     of the query set — the price of removing the broadcast; for
     corpus-scale query sets prefer the IVF/LSH routes, which shuffle
     queries once."""
-    import numpy as np
-    import pandas as pd
-
-    from scio_spark.functions.hnsw import build_hnsw, search_hnsw
+    from scio_spark.functions.hnsw import build_hnsw
 
     S = max(1, n_shards)
-    cshard = corpus.select(
-        F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv")
-    ).withColumn("__shard", F.pmod(F.xxhash64(F.col("__cid")), F.lit(S)).cast("int"))
-    qshard = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    ).withColumn("__shard", F.explode(F.array(*[F.lit(i) for i in range(S)])))
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cshard = c.withColumn(
+        "__shard", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(S)).cast("int")
+    )
+    q = R.as_queries(queries, id_col, vec_col)
+    qshard = q.withColumn("__shard", F.explode(F.array(*[F.lit(i) for i in range(S)])))
 
-    def probe(_key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {
-            "query_id": pd.Series(dtype="int64"),
-            "neighbor_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float64"),
-        }
+    def shard(_key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
         if qpdf.empty or cpdf.empty:
-            return pd.DataFrame(cols)
+            return R.cut((), k, 0.0, scores=True)
         if len(cpdf) > max_group_rows:
             raise ValueError(
                 f"cosine_topk_hnsw_sharded: shard "
@@ -1160,71 +820,17 @@ def cosine_topk_hnsw_sharded(
                 f"workload across runs (queries replicate to EVERY shard "
                 f"here) or use the IVF/LSH routes, or raise the cap"
             )
-        c_ids = cpdf["__cid"].to_numpy()
-        mat = np.array(list(cpdf["__cv"]), dtype=np.float64)
-        index = build_hnsw(mat, m=m, ef_construction=ef_construction)
-        ef = index.n if ef_search is None else max(ef_search, k + 2)
-        id_of = {int(v): j for j, v in enumerate(c_ids)}
-        margin = cut_margin(score_decimals)
-        out = []
-        for q_id, vec in zip(qpdf["query_id"], qpdf["__qv"]):
-            q_id = int(q_id)
-            self_row = id_of.get(q_id, -1)
-            # exact_rescore: cut the beam to the score-safe per-shard
-            # top-k before the JVM rescore (guide §2.3) — every row
-            # within cut_margin of the shard's k-th beam score survives,
-            # so the rescored global rank is identical to emitting the
-            # whole beam (per-shard containment: k kept rows strictly
-            # outrank any dropped row even after rounding). The
-            # approximate regime keeps per-shard top-k directly.
-            n_keep = ef if exact_rescore else min(k + 1, index.n)
-            found = search_hnsw(index, np.asarray(vec, np.float64), n_keep, ef)
-            if exact_rescore:
-                sims = np.fromiter((s for s, _ in found), np.float64, len(found))
-                rows = np.fromiter((r for _, r in found), np.int64, len(found))
-                nonself = rows != self_row
-                sims, rows = sims[nonself], rows[nonself]
-                kp = keep_candidates(sims, k, margin)
-                out.extend(
-                    (q_id, int(c_ids[r]), float(s))
-                    for s, r in zip(sims[kp], rows[kp])
-                )
-                continue
-            kept = 0
-            for s, row in found:
-                if row == self_row:
-                    continue
-                kept += 1
-                if kept > k:
-                    break
-                out.append((q_id, int(c_ids[row]), float(s)))
-        return pd.DataFrame(out, columns=list(cols)) if out else pd.DataFrame(cols)
+        index = build_hnsw(
+            R._mat(cpdf["__cv"], np.float64), m=m, ef_construction=ef_construction
+        )
+        c_ids = cpdf["neighbor_id"].to_numpy()
+        return _hnsw_cut(index, c_ids, qpdf, k, ef_search, exact_rescore, score_decimals)
 
     cands = (
         qshard.groupBy("__shard")
         .cogroup(cshard.groupBy("__shard"))
-        .applyInPandas(probe, "query_id long, neighbor_id long, score double")
+        .applyInPandas(shard, R.PAIRS + ", score double")
     )
-    if exact_rescore:
-        qv = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-        cv = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-        )
-        scored = (
-            cands.drop("score")
-            .join(qv, "query_id")
-            .join(cv, "neighbor_id")
-            .withColumn("score", _dot(F.col("__qv"), F.col("__cv")))
-        )
-    else:
-        scored = cands
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    if not exact_rescore:
+        return R.rank_topk(cands, k, score_decimals)
+    return R.exact_topk(cands.drop("score"), q, c, k, score_decimals)

@@ -37,19 +37,18 @@ SIDE_INPUT_MAX_ROWS = 4_000_000
 #: Byte budget companion to the row cap: a wide-row side input (long
 #: documents, fat embeddings) can bloat the driver while staying under the
 #: row count, so the guard also sums approximate serialized bytes
-#: (similarity.SIDE_INPUT_MAX_BYTES, 2 GiB default).
-SIDE_INPUT_MAX_BYTES = None  # None -> similarity module default
+#: (retrieval.SIDE_INPUT_MAX_BYTES, 2 GiB default).
+SIDE_INPUT_MAX_BYTES = None  # None -> retrieval module default
 
 
 def _guard_side_input(
     df: DataFrame, what: str, max_rows: int, max_bytes=SIDE_INPUT_MAX_BYTES
 ) -> None:
-    from scio_spark.functions import similarity
+    from scio_spark.functions import retrieval
 
-    require = similarity.require_side_input_sized
     if max_bytes is None:
-        max_bytes = similarity.SIDE_INPUT_MAX_BYTES
-    require(df, max_rows, what, "max_rows", max_bytes=max_bytes)
+        max_bytes = retrieval.SIDE_INPUT_MAX_BYTES
+    retrieval.require_side_input_sized(df, max_rows, what, "max_rows", max_bytes=max_bytes)
 
 
 def side_input_singleton(df: DataFrame):

@@ -5,7 +5,7 @@ with np.argpartition (arbitrary tie order) while the FINAL ranking sorts by
 ROUNDED score desc, neighbor_id asc. With >= k+4 tied or near-tied scores
 (duplicate embeddings — the norm in a dedup corpus) or score_decimals
 rounding creating ties across the cut, a true top-k row could be silently
-dropped. similarity.keep_candidates + cut_margin close the class; these
+dropped. retrieval.keep_candidates + cut_margin close the class; these
 tests plant the exact boundary shapes (the 0.399996-cosine pattern found
 at sf1 in r14).
 """
@@ -15,7 +15,7 @@ import math
 import numpy as np
 import pytest
 
-from scio_spark.functions.similarity import cut_margin, keep_candidates
+from scio_spark.functions.retrieval import cut_margin, keep_candidates
 
 
 # ---------- unit: the helper itself ----------------------------------------

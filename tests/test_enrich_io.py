@@ -66,7 +66,7 @@ def test_side_input_byte_budget_extrapolates_beyond_sample(spark):
     head sample instead of scanning every row (full-width octet_length/
     to_json over millions of side-input rows per build is the r13-ADVICE
     regression); the extrapolated estimate must still trip the budget."""
-    from scio_spark.functions.similarity import (
+    from scio_spark.functions.retrieval import (
         SIDE_INPUT_BYTE_SAMPLE,
         require_side_input_sized,
     )
@@ -78,6 +78,17 @@ def test_side_input_byte_budget_extrapolates_beyond_sample(spark):
         require_side_input_sized(wide, n, "test", "max_rows", max_bytes=1 << 20)
     # generous budget passes without scanning past the sample
     require_side_input_sized(wide, n, "test", "max_rows", max_bytes=1 << 30)
+    # a modest input under a large cap is summed exactly (the first
+    # 2*SIDE_INPUT_BYTE_SAMPLE rows always are), so one ~2 MiB row among
+    # thousands of narrow ones trips the budget instead of being missed
+    # by a sample sized from the cap
+    skewed = spark.range(n).selectExpr(
+        "id AS k", "IF(id = 4321, repeat('x', 2 << 20), 'x') AS v"
+    )
+    with pytest.raises(ValueError, match="byte budget"):
+        require_side_input_sized(
+            skewed, 10_000_000, "test", "max_rows", max_bytes=1 << 20
+        )
 
 
 def test_with_side_input(spark):

@@ -316,3 +316,60 @@ def test_ivfpq_residual_codes_reconstruct_better_on_clustered_data(spark, tmp_pa
     build_ivfpq_index(df, p_res, residual=True, **kw)
     e_raw, e_res = recon_err(p_raw, False), recon_err(p_res, True)
     assert e_res < 0.5 * e_raw, (e_res, e_raw)
+
+
+def _broadcast_leaves(df):
+    """Leaf operators under every BroadcastExchange of df's physical plan."""
+
+    def walk(node, under):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        under = under or node.nodeName() == "BroadcastExchange"
+        kids = node.children()
+        if kids.isEmpty() and under:
+            yield node.toString()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i), under)
+
+    return list(walk(df._jdf.queryExecution().executedPlan(), False))
+
+
+def test_over_budget_index_is_not_broadcast(vecs, tmp_path):
+    """An index past the broadcast budget (autoBroadcastJoinThreshold=-1
+    stands in for one over 64 MB) must reach the exact re-cut and rescore
+    through a shuffle join — no BroadcastExchange over the index vectors —
+    and return the same rows as the default session. The queries are an
+    in-memory frame, so every parquet scan is an index scan."""
+    from scio_spark.functions.pq import (
+        build_ivfpq_index,
+        build_pq_index,
+        search_ivfpq_index,
+        search_pq_index,
+    )
+
+    spark = vecs.sparkSession
+    pq_path = str(tmp_path / "pq_over")
+    ivfpq_path = str(tmp_path / "ivfpq_over")
+    build_pq_index(vecs, pq_path, m=8, n_codes=16, iters=4)
+    build_ivfpq_index(vecs, ivfpq_path, n_clusters=4, m=8, n_codes=16, iters=4)
+    qs = vecs.filter("vec_id % 40 = 0")
+    searches = {
+        pq_path: lambda: search_pq_index(spark, pq_path, qs, k=3, oversample=200),
+        ivfpq_path: lambda: search_ivfpq_index(
+            spark, ivfpq_path, qs, k=3, n_probe=4, oversample=200
+        ),
+    }
+    want = {p: sorted(map(tuple, run().collect())) for p, run in searches.items()}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for path, run in searches.items():
+            df = run()
+            leaves = _broadcast_leaves(df)
+            assert not any(
+                "FileScan parquet" in leaf and "embedding" in leaf for leaf in leaves
+            ), leaves
+            assert sorted(map(tuple, df.collect())) == want[path]
+    finally:
+        spark.conf.set(key, old)

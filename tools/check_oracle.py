@@ -13,13 +13,14 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 import re
 import sys
 from collections import defaultdict
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

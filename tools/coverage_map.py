@@ -14,7 +14,8 @@ earning a driver row. "Existed through round R" is tracked in
 tool, we record the max completed correctness round at that moment; every
 correctness round strictly greater than that baseline in which the query is
 absent counts as a missed round. Two misses with zero rows = failure, so a
-never-rowed addition can never slip past a second window unnoticed.
+never-rowed addition can never slip past a second window unnoticed —
+unless it sits in the NEXT window, where it is scheduled for its first row.
 
 Usage: python tools/coverage_map.py   (writes COVERAGE.md; run per round
 after CORRECTNESS_r{N}.json lands, plus once before the round to record the
@@ -63,12 +64,16 @@ def update_first_seen(
 
 
 def stale_never_rowed(
-    names: list[str], rounds: dict[int, dict], first_seen: dict[str, int]
+    names: list[str],
+    rounds: dict[int, dict],
+    first_seen: dict[str, int],
+    window: list[str] = (),
 ) -> list[str]:
-    """Queries that missed >= 2 completed driver rounds with zero rows ever."""
+    """Queries that missed >= 2 completed gate rounds with zero rows ever.
+    A query in ``window`` (the next gate window) is scheduled, not stale."""
     out = []
     for name in names:
-        if any(name in rounds[r] for r in rounds):
+        if name in window or any(name in rounds[r] for r in rounds):
             continue
         base = first_seen.get(name, max(rounds, default=0))
         missed = sum(1 for r in rounds if r > base and name not in rounds[r])
@@ -133,11 +138,16 @@ def main() -> int:
         if n not in window
         and (max((r for r in rounds if n in rounds[r]), default=0) < max(rounds, default=0))
     ]
-    ratchet = stale_never_rowed(names, rounds, first_seen)
+    ratchet = stale_never_rowed(names, rounds, first_seen, names[:50])
+    scheduled = [
+        n for n in stale_never_rowed(names, rounds, first_seen) if n not in ratchet
+    ]
     lines += [
         "",
         f"Queries with no driver row yet: {', '.join(never) or 'none'}.",
         f"Rotated out AND not checked last round: {', '.join(stale) or 'none'}.",
+        f"Never-rowed past two rounds but scheduled in the next window: "
+        f"{', '.join(scheduled) or 'none'}.",
         (
             "FRESHNESS RATCHET FAILED — never-rowed after >=2 completed rounds: "
             + ", ".join(ratchet)
