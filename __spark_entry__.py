@@ -6555,14 +6555,19 @@ def q_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 1 and UPDATED in batch 2: the foreachBatch partition-swap upsert
     must merge, not overwrite. Final table == full batch aggregation, so
     the streaming_window oracle applies."""
-    import shutil
+    import time
 
+    from scio_spark.operators.merge import _fs
     from scio_spark.streaming.core import ensure_event_time, maintain_rollup
 
     stage = _rt_path(sf_dir, "rollup_stage")
     table = _rt_path(sf_dir, "rollup_table")
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(table, ignore_errors=True)
+    # Hadoop FileSystem calls throughout, so the staging works on any
+    # storage the session can write (HDFS, object stores), not only local
+    jvm, _, fs = _fs(spark, stage)
+    HPath = jvm.org.apache.hadoop.fs.Path
+    fs.delete(HPath(stage), True)
+    fs.delete(HPath(table), True)
     sc = _ctx(spark)
     ev = _t(sc, sf_dir, "events").df
     split = F.lit("2024-01-16 00:30:00").cast(dict(ev.dtypes)["ts"])
@@ -6573,11 +6578,9 @@ def q_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inference) and the second batch's file mtime is bumped so
     # FileStreamSource's timestamp ordering processes batch 0 first —
     # the mid-hour boundary row MUST arrive before the update batch or
-    # the watermark from batch 1 could drop batch 0's rows.
-    import glob as _glob
-    import os as _os
-    import time as _time
-
+    # the watermark from batch 1 could drop batch 0's rows. A side of the
+    # split with no rows gets no __b dir from the write; it becomes an
+    # empty batch dir.
     (
         ev.withColumn(
             "__b", F.when(F.col("ts") < split, 0).otherwise(1)
@@ -6586,11 +6589,15 @@ def q_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("__b")
         .parquet(stage)
     )
-    _os.rename(f"{stage}/__b=0", f"{stage}/batch_00000")
-    _os.rename(f"{stage}/__b=1", f"{stage}/batch_00001")
-    late = _time.time() + 60
-    for f in _glob.glob(f"{stage}/batch_00001/*"):
-        _os.utime(f, (late, late))
+    for b in (0, 1):
+        side, batch = HPath(stage, f"__b={b}"), HPath(stage, f"batch_{b:05d}")
+        if fs.exists(side):
+            fs.rename(side, batch)
+        else:
+            fs.mkdirs(batch)
+    late_ms = int((time.time() + 60) * 1000)
+    for st in fs.listStatus(HPath(stage, "batch_00001")):
+        fs.setTimes(st.getPath(), late_ms, late_ms)
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)

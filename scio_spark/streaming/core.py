@@ -179,7 +179,8 @@ def maintain_rollup(
     directory into the table with Hadoop-FS renames. Only the partitions
     touched by the epoch are rewritten — the existing-rows read is
     statically pruned to the affected directories, so the table's history
-    is never re-scanned. A retried epoch redoes the same swap (idempotent —
+    is never re-scanned. The epoch is evaluated once; state metrics count
+    each row once. A retried epoch redoes the same swap (idempotent —
     exactly-once with a checkpoint). At 100 TB this is the standard way to
     keep a queryable aggregate fresh without re-scanning history; with a
     table format available (Delta/Iceberg) the swap becomes a MERGE.
@@ -206,62 +207,74 @@ def maintain_rollup(
         agg = agg.withColumn("window_date", F.to_date("window_start"))
 
     def upsert(batch_df: DataFrame, epoch_id: int):
-        # the affected partition list is small by construction (bounded by
-        # the windows an epoch can touch under the watermark); collecting it
-        # doubles as the emptiness check — one job instead of two per epoch
-        affected = [
-            r[part_col] for r in batch_df.select(part_col).distinct().collect()
-        ]
-        if not affected:
-            return
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        HPath = jvm.org.apache.hadoop.fs.Path
-        target = HPath(path)
-        fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-        # explicit existence check — a transient read failure must propagate
-        # (and retry the micro-batch), never be mistaken for "first epoch"
-        # and destroy partition contents with a partial overwrite
-        table_exists = bool(fs.globStatus(HPath(path, part_col + "=*")))
-        # merge semantics: keep existing rows of the affected partitions
-        # whose (window, key) was NOT updated this epoch, union the updates
-        # (update mode emits only changed keys — a bare partition overwrite
-        # would drop the unchanged ones)
-        merged = batch_df
-        if table_exists:
-            merge_on = ["window_start"] + key_cols
-            # isin on the partition column statically prunes the scan to
-            # the affected directories — the table's history is never
-            # re-scanned
-            existing = spark.read.parquet(path).filter(
-                F.col(part_col).isin(affected)
+        # foreachBatch hands over the incremental plan itself: every action
+        # on batch_df would re-run the stateful aggregation and commit its
+        # state store again (double-counting its progress metrics). Caching
+        # makes the first action the epoch's only evaluation.
+        batch_df.persist()
+        try:
+            # the affected partition list is small by construction (bounded by
+            # the windows an epoch can touch under the watermark); collecting it
+            # doubles as the emptiness check — one job instead of two per epoch
+            affected = [
+                r[part_col] for r in batch_df.select(part_col).distinct().collect()
+            ]
+            if not affected:
+                return
+            spark = batch_df.sparkSession
+            jvm = spark._jvm
+            HPath = jvm.org.apache.hadoop.fs.Path
+            target = HPath(path)
+            fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
+            # explicit existence check — a transient read failure must propagate
+            # (and retry the micro-batch), never be mistaken for "first epoch"
+            # and destroy partition contents with a partial overwrite
+            table_exists = bool(fs.globStatus(HPath(path, part_col + "=*")))
+            # merge semantics: keep existing rows of the affected partitions
+            # whose (window, key) was NOT updated this epoch, union the updates
+            # (update mode emits only changed keys — a bare partition overwrite
+            # would drop the unchanged ones)
+            merged = batch_df
+            if table_exists:
+                merge_on = ["window_start"] + key_cols
+                # isin on the partition column statically prunes the scan to
+                # the affected directories — the table's history is never
+                # re-scanned. The table holds exactly the columns this upsert
+                # writes, so the epoch's schema reads it without a footer-
+                # inference job.
+                existing = (
+                    spark.read.schema(batch_df.schema)
+                    .parquet(path)
+                    .filter(F.col(part_col).isin(affected))
+                )
+                keep = existing.join(batch_df.select(*merge_on), merge_on, "left_anti")
+                merged = batch_df.unionByName(keep.select(*batch_df.columns))
+            tmp = path.rstrip("/") + f"__epoch_tmp_{epoch_id}"
+            tmp_path = HPath(tmp)
+            if fs.exists(tmp_path):  # leftover from a failed attempt of this epoch
+                fs.delete(tmp_path, True)
+            # co-locate each partition's rows in one task → one file per
+            # partition directory (otherwise every shuffle task writes a sliver
+            # file into every partition it holds — O(tasks × partitions) files)
+            (
+                merged.repartition(part_col)
+                .write.mode("overwrite")
+                .partitionBy(part_col)
+                .parquet(tmp)
             )
-            keep = existing.join(batch_df.select(*merge_on), merge_on, "left_anti")
-            merged = batch_df.unionByName(keep.select(*batch_df.columns))
-        tmp = path.rstrip("/") + f"__epoch_tmp_{epoch_id}"
-        tmp_path = HPath(tmp)
-        if fs.exists(tmp_path):  # leftover from a failed attempt of this epoch
+            if not fs.exists(target):
+                fs.mkdirs(target)
+            for st in fs.listStatus(tmp_path):
+                name = st.getPath().getName()
+                if not name.startswith(part_col + "="):
+                    continue
+                dest = HPath(target, name)
+                if fs.exists(dest):
+                    fs.delete(dest, True)
+                fs.rename(st.getPath(), dest)
             fs.delete(tmp_path, True)
-        # co-locate each partition's rows in one task → one file per
-        # partition directory (otherwise every shuffle task writes a sliver
-        # file into every partition it holds — O(tasks × partitions) files)
-        (
-            merged.repartition(part_col)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(tmp)
-        )
-        if not fs.exists(target):
-            fs.mkdirs(target)
-        for st in fs.listStatus(tmp_path):
-            name = st.getPath().getName()
-            if not name.startswith(part_col + "="):
-                continue
-            dest = HPath(target, name)
-            if fs.exists(dest):
-                fs.delete(dest, True)
-            fs.rename(st.getPath(), dest)
-        fs.delete(tmp_path, True)
+        finally:
+            batch_df.unpersist()
 
     writer = agg.writeStream.outputMode("update").foreachBatch(upsert)
     if checkpoint:

@@ -275,3 +275,33 @@ def test_fluent_io_new_formats(spark, tmp_path):
     c.save_as_arrow_file(d)
     assert ctx.arrow_file(d).df.schema == df.schema
     assert ctx.arrow_file(d).df.count() == 40
+
+
+def test_file_listing_fans_out_at_most_one_task_per_core(spark, tmp_path):
+    """Past Spark's 32-path threshold, file listing runs as a distributed
+    job; build_session caps its fan-out at the session's cores instead of
+    one task per path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = []
+    for i in range(40):
+        paths.append(str(tmp_path / f"part-{i:02d}.parquet"))
+        pq.write_table(pa.table({"id": pa.array([i], pa.int64())}), paths[-1])
+    sc = spark.sparkContext
+    group = f"listing-{tmp_path.name}"
+    sc.setJobGroup(group, "read 40 paths")
+    try:
+        n = spark.read.schema("id long").parquet(*paths).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 40
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert tasks  # the listing and the count ran under the group
+    assert max(tasks) <= sc.defaultParallelism, tasks

@@ -6,6 +6,7 @@ the watermark, update-mode accumulation, and stateful running counts across
 batches (applyInPandasWithState)."""
 
 import datetime as dt
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -295,6 +296,16 @@ def test_maintain_rollup_incremental_upsert(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
+    # each epoch is evaluated once: the aggregation counts each upserted
+    # (window, team) row once, not once per action the upsert runs
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    updated = [
+        p["stateOperators"][0]["numRowsUpdated"]
+        for p in progress
+        if p["numInputRows"] > 0
+    ]
+    assert updated == [2, 1]
+
     table = spark.read.parquet(out)
     got = {(r["team"], r["window_start"].minute): r["total"] for r in table.collect()}
     assert got == {("red", 0): 7, ("blue", 0): 3}  # blue survived the rewrite
@@ -333,6 +344,21 @@ def test_maintain_rollup_per_window_partitioning(spark, tmp_path):
     assert len(dirs) == 2  # one dir per distinct window
     got = {r["team"]: r["total"] for r in spark.read.parquet(out).collect()}
     assert got == {"red": 5, "blue": 3}
+
+
+def test_continuous_rollup_stages_a_one_sided_split(spark, tmp_path):
+    """The continuous_rollup contract query stages its events as two stream
+    batches split at 2024-01-16 00:30; events all on one side leave the
+    other batch empty instead of failing the staging."""
+    import __spark_entry__ as ent
+
+    spark.createDataFrame(
+        [(1, ts(1), "click"), (2, ts(2), "click"), (3, ts(40), "view")],
+        "event_id long, ts timestamp, event_type string",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    out = ent.q_continuous_rollup(spark, str(tmp_path)).collect()
+    got = {(r["window_start"].hour, r["event_type"]): r["n"] for r in out}
+    assert got == {(10, "click"): 2, (10, "view"): 1}
 
 
 def test_leaderboard_early_and_final_panes(fixture):

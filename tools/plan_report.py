@@ -4,10 +4,12 @@ strategies, shuffle counts). Run: python tools/plan_report.py"""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.001"
 
@@ -137,7 +139,7 @@ def main():
         "- Single-shuffle aggregations (count_by_key, sum_by_key, windows)",
         "  show exactly 1 exchange: the groupBy itself.",
     ]
-    open("/root/repo/PLANS.md", "w").write("\n".join(lines) + "\n")
+    open(os.path.join(ROOT, "PLANS.md"), "w").write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(ent.queries())} queries)")
 
 
