@@ -5,7 +5,7 @@ slowdown detection (TrafficRoutes) — the two scio complete examples
 TrafficMaxLaneFlow.scala, TrafficRoutes.scala) re-expressed Spark-first.
 
 Both stages are also oracle-checked contract queries
-(traffic_max_lane_flow / traffic_routes in __spark_entry__.py); this
+(traffic_max_lane_flow / traffic_routes in scio_spark/contract/windows.py); this
 example shows them composed as a user would: shared sliding-window
 assignment, two aggregations, a joined report.
 Run: python examples/traffic_monitor.py [sf_dir] [out_dir]

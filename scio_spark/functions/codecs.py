@@ -411,14 +411,6 @@ def encode_png(
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 # Adam7 pass grid: (x_start, y_start, x_step, y_step) per pass
 _ADAM7 = (
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),

@@ -59,14 +59,6 @@ except ImportError:
     HAS_PIL = False
 
 
-def repartition_by_bytes(df: DataFrame, size_col_expr, target_bytes: int = 128 * 1024 * 1024) -> DataFrame:
-    """Partition so each task holds ~target_bytes of payload (binary rows are
-    wildly non-uniform; row-count partitioning over/under-packs executors)."""
-    total = df.agg(F.sum(F.expr(size_col_expr)).alias("b")).collect()[0]["b"] or 0
-    n = max(1, int(total / target_bytes) + 1)
-    return df.repartition(n)
-
-
 def content_stats(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Cheap JVM-side facts about the payload (no decode, no Python):
     byte length + digest for exact-dup detection of assets."""

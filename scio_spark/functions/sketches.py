@@ -78,8 +78,3 @@ def rollup_agg(df: DataFrame, dims, aggs) -> DataFrame:
 
 def cube_agg(df: DataFrame, dims, aggs) -> DataFrame:
     return df.cube(*dims).agg(*aggs)
-
-
-def grouping_sets_agg(df: DataFrame, sets: list[list[str]], dims: list[str], aggs) -> DataFrame:
-    """GROUPING SETS via groupingSets (Spark 4) — arbitrary dim subsets."""
-    return df.groupingSets([[F.col(c) for c in s] for s in sets], *[F.col(d) for d in dims]).agg(*aggs)

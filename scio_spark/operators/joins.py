@@ -211,19 +211,6 @@ def sparse_join(left, right, how: str = "inner", fpp: float = 0.01,
     raise ValueError(f"sparse_join: unsupported how={how!r}")
 
 
-def sparse_intersect_by_key(left, right):
-    """PairSCollectionFunctions.scala:919 — RHS keyset left_semi. No
-    broadcast hint: scio's sparseIntersectByKey exists for keysets too big
-    to ship as a side input (it Bloom-filters them), so forcing broadcast
-    here would invert the operator's point at scale; AQE broadcasts the
-    distinct keyset at runtime whenever it measures small."""
-    from scio_spark.pair import PairSCollection
-
-    keys = left.key_cols
-    rhs_keys = right.df.select(*keys).distinct()
-    return PairSCollection(left.df.join(rhs_keys, keys, "left_semi"), keys, left.context)
-
-
 def sparse_lookup(left, right, suffixes=("_1", "_2")):
     """PairSCollectionFunctions.scala:438 ``sparseLookup`` — join RHS values
     into LHS as an array, after semi-join reduction of the RHS by LHS keys."""

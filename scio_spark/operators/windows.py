@@ -42,12 +42,6 @@ def with_sliding_windows(df: DataFrame, ts_col: str, size: str, slide: str) -> D
     )
 
 
-def with_session_windows(df: DataFrame, ts_col: str, gap: str, *key_cols: str) -> DataFrame:
-    """Session windows (:1258) for batch+streaming grouping: returns the
-    grouped frame keyed by (keys..., session_window). Aggregate on top."""
-    return df.groupBy(F.session_window(F.col(ts_col), gap), *key_cols)
-
-
 def with_calendar_window(
     df: DataFrame, ts_col: str, unit: str = "month", number: int = 1
 ) -> DataFrame:

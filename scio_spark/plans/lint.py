@@ -55,17 +55,6 @@ def assert_no_shuffle(df: DataFrame, msg: str = ""):
     assert n == 0, f"expected shuffle-free plan, found {n} exchanges. {msg}\n{executed_plan(df)}"
 
 
-def assert_broadcast(df: DataFrame):
-    assert has_broadcast_join(df), f"expected broadcast join:\n{executed_plan(df)}"
-
-
-def assert_pushdown(df: DataFrame, fragment: str):
-    pushed = scan_pushed_filters(df)
-    assert any(fragment in p for p in pushed), (
-        f"filter '{fragment}' not pushed to scan; pushed={pushed}"
-    )
-
-
 def find_all_pairs_joins(
     df: DataFrame, max_side_bytes: int = 32 << 20
 ) -> list[str]:

@@ -10,6 +10,9 @@ Decimal STAGING inside a query is fine (and encouraged for associative
 sums); the final projection must cast back to double.
 """
 
+import os
+import re
+
 import pyspark.sql.types as T
 import pytest
 
@@ -54,3 +57,15 @@ def test_queries_and_oracles_align():
     q, o = set(ent.queries()), set(ent.oracle_sql())
     assert o <= q, f"oracles without queries: {sorted(o - q)}"
     assert q == o, f"queries without oracles: {sorted(q - o)}"
+    assert ent.WALL_CLOCK <= q, sorted(ent.WALL_CLOCK - q)
+    assert set(ent.SOAK) <= q, sorted(set(ent.SOAK) - q)
+
+
+def test_query_order_matches_coverage_map():
+    """The driver window is the queries() order; the committed COVERAGE.md
+    (tools/coverage_map.py) lists the same names in the same order, so a
+    reorder or rename shows up here rather than in the next gate round."""
+    path = os.path.join(os.path.dirname(__file__), "..", "COVERAGE.md")
+    with open(path) as f:
+        rows = re.findall(r"^\| \d+ \| (\w+) \|", f.read(), re.MULTILINE)
+    assert rows == list(ent.queries())

@@ -13,7 +13,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_pricing_summary_pushdown_and_pruning(spark):
-    df = ent.q_pricing_summary(spark, SF)
+    df = ent.queries()["pricing_summary"](spark, SF)
     # shipdate predicate reaches the parquet scan
     assert any("l_shipdate" in p for p in lint.scan_pushed_filters(df))
     # only the 7 needed columns read, not all 11
@@ -24,32 +24,32 @@ def test_pricing_summary_pushdown_and_pruning(spark):
 
 
 def test_top_orders_filter_pushdown(spark):
-    df = ent.q_top_orders(spark, SF)
+    df = ent.queries()["top_orders"](spark, SF)
     assert any("c_mktsegment" in p for p in lint.scan_pushed_filters(df))
 
 
 def test_hash_join_query_broadcasts(spark):
-    df = ent.q_hash_join(spark, SF)
+    df = ent.queries()["hash_join"](spark, SF)
     assert lint.has_broadcast_join(df)
     assert lint.count_shuffles(df) == 0
 
 
 def test_local_supplier_volume_broadcasts_dims(spark):
-    df = ent.q_local_supplier_volume(spark, SF)
+    df = ent.queries()["local_supplier_volume"](spark, SF)
     plan = lint.executed_plan(df)
     assert "BroadcastHashJoin" in plan  # nation/region never shuffle
     assert any("r_name" in p for p in lint.scan_pushed_filters(df))
 
 
 def test_sparse_join_query_semi_reduces(spark):
-    df = ent.q_sparse_join(spark, SF)
+    df = ent.queries()["sparse_join"](spark, SF)
     plan = lint.executed_plan(df)
     assert "LeftSemi" in plan and "BroadcastHashJoin" in plan
     assert any("p_size" in p for p in lint.scan_pushed_filters(df))
 
 
 def test_embedding_topk_gemm_candidates_then_broadcast_rescore(spark):
-    df = ent.q_embedding_topk(spark, SF)
+    df = ent.queries()["embedding_topk"](spark, SF)
     plan = lint.executed_plan(df)
     # GEMM candidate generation (Arrow batch) + broadcast of the query set
     # for the exact rescore: corpus side joins without shuffling on queries
@@ -92,7 +92,7 @@ def test_salted_agg_collect_list_size(sc):
 def test_decontaminate_broadcasts_eval_shingles(spark):
     """The eval shingle set must be the broadcast side — the training corpus
     never shuffles on the shingle key."""
-    df = ent.q_decontaminate(spark, SF)
+    df = ent.queries()["decontaminate"](spark, SF)
     from scio_spark.plans import lint
 
     assert lint.has_broadcast_join(df)
@@ -124,7 +124,7 @@ def test_jaccard_verify_no_forced_corpus_broadcast(spark):
 
 def test_data_mixture_pushes_source_filters(spark):
     """Per-source doc_id filters reach the parquet scans."""
-    df = ent.q_data_mixture(spark, SF)
+    df = ent.queries()["data_mixture"](spark, SF)
     from scio_spark.plans import lint
 
     assert lint.scan_pushed_filters(df)
@@ -164,7 +164,7 @@ def test_running_total_single_data_exchange_and_pushdown(spark):
     scan, and the only full-data exchange is the window's hash exchange on
     the bucket column (no rangepartitioning anywhere — the
     repartitionByRange spelling would add a second full shuffle)."""
-    df = ent.q_running_total(spark, SF)
+    df = ent.queries()["running_total"](spark, SF)
     assert any("l_shipdate" in p for p in lint.scan_pushed_filters(df))
     plan = lint.executed_plan(df)
     assert "rangepartitioning" not in plan
@@ -172,7 +172,7 @@ def test_running_total_single_data_exchange_and_pushdown(spark):
 
 
 def test_source_cap_prunes_columns(spark):
-    df = ent.q_source_cap(spark, SF)
+    df = ent.queries()["source_cap"](spark, SF)
     schemas = lint.scan_read_schemas(df)
     # text (the wide column) must not be read for a cap on doc_id/source
     assert schemas and all("text" not in s for s in schemas)
@@ -181,7 +181,7 @@ def test_source_cap_prunes_columns(spark):
 def test_funnel_joins_stay_keyed(spark):
     """No cartesian/BNLJ anywhere in the funnel chain — each stage is an
     equi-join on the user key."""
-    df = ent.q_funnel(spark, SF)
+    df = ent.queries()["funnel"](spark, SF)
     plan = lint.executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -194,7 +194,7 @@ def test_traffic_max_lane_flow_single_exchange_struct_argmax(spark):
     window (whose per-partition sort of every reading is the expensive
     spelling at 100 TB). The SortAggregate's grouping Sort is fine; a
     Window operator is the regression."""
-    df = ent.q_traffic_max_lane_flow(spark, SF)
+    df = ent.queries()["traffic_max_lane_flow"](spark, SF)
     plan = lint.executed_plan(df)
     assert plan.count("Exchange") == 1, plan
     assert "Window" not in plan
@@ -207,7 +207,7 @@ def test_traffic_routes_one_lag_window_two_exchanges(spark):
     partial-aggregable group, two hash exchanges total, no global sort
     (the LAG's ordering is within hash partitions, never a
     rangepartitioning)."""
-    df = ent.q_traffic_routes(spark, SF)
+    df = ent.queries()["traffic_routes"](spark, SF)
     plan = lint.executed_plan(df)
     assert plan.count("Exchange") == 2, plan
     assert plan.count("Window") == 1
@@ -217,7 +217,7 @@ def test_traffic_routes_one_lag_window_two_exchanges(spark):
 def test_data_checks_row_rules_single_scan(spark):
     """All four row rules share one aggregate; lineitem is scanned once
     for them (the uniqueness rule adds its own scan + partial agg)."""
-    df = ent.q_data_checks(spark, SF)
+    df = ent.queries()["data_checks"](spark, SF)
     plan = lint.executed_plan(df)
     assert plan.count("FileScan parquet") <= 2
 

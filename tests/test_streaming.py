@@ -356,7 +356,7 @@ def test_continuous_rollup_stages_a_one_sided_split(spark, tmp_path):
         [(1, ts(1), "click"), (2, ts(2), "click"), (3, ts(40), "view")],
         "event_id long, ts timestamp, event_type string",
     ).write.parquet(str(tmp_path / "events.parquet"))
-    out = ent.q_continuous_rollup(spark, str(tmp_path)).collect()
+    out = ent.queries()["continuous_rollup"](spark, str(tmp_path)).collect()
     got = {(r["window_start"].hour, r["event_type"]): r["n"] for r in out}
     assert got == {(10, "click"): 2, (10, "view"): 1}
 

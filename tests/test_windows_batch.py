@@ -338,7 +338,7 @@ def traffic_dir(spark, tmp_path):
 def test_traffic_max_lane_flow_argmax_and_tiebreak(spark, traffic_dir):
     import __spark_entry__ as ent
 
-    out = ent.q_traffic_max_lane_flow(spark, traffic_dir).collect()
+    out = ent.queries()["traffic_max_lane_flow"](spark, traffic_dir).collect()
     got = {
         (str(r.window_start), r.station): (r.max_flow, r.event_id, r.n_readings)
         for r in out
@@ -354,7 +354,7 @@ def test_traffic_max_lane_flow_argmax_and_tiebreak(spark, traffic_dir):
 def test_traffic_routes_slowdown_and_avg(spark, traffic_dir):
     import __spark_entry__ as ent
 
-    out = ent.q_traffic_routes(spark, traffic_dir).collect()
+    out = ent.queries()["traffic_routes"](spark, traffic_dir).collect()
     got = {
         (str(r.window_start), r.route): (r.n_readings, r.avg_speed, r.slowdown)
         for r in out

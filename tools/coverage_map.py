@@ -1,8 +1,8 @@
 """Regenerate COVERAGE.md — the per-round driver-coverage map.
 
 The external driver records correctness rows for only the FIRST 50
-``queries()`` entries each round, so the entry dict rotates its ordering
-(see the ``queries()`` docstring). This map makes the rotation auditable:
+``queries()`` entries each round, so ``__spark_entry__.CONTRACT`` rotates
+its ordering (see the comment above it). This map makes the rotation auditable:
 for every query, which rounds produced a driver row and what the latest
 driver verdict was — so a regression in a rotated-out query is traceable to
 the last round that actually checked it.

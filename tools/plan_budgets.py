@@ -1,6 +1,7 @@
-"""Capture plan-shape budgets for the top compute queries.
+"""Capture plan-shape budgets for the contract queries.
 
-Prints, for each named contract query at sf0.001: total Exchange count,
+Prints, for each named contract query at sf0.001 (every ``queries()`` entry
+when no name is given): total Exchange count,
 hash/range exchange count, join strategies present, and whether an
 unbounded all-pairs join appears. Used to (re)pin the budgets asserted
 in tests/test_query_plans.py::test_top_compute_query_plan_budgets —
@@ -16,15 +17,6 @@ import sys
 REPO = __file__.rsplit("/", 2)[0]
 sys.path.insert(0, REPO)
 
-TOP_COMPUTE = [
-    "dedup_clusters", "dedup_minhash_lsh", "sparse_join_bloom",
-    "incremental_dedup", "fuzzy_join", "smb_join", "substring_dedup",
-    "dedup_ngram_jaccard", "dsir_select", "winnow_fingerprints",
-    "curation_e2e", "dedup_simhash", "pipe_identity", "lang_id",
-    "video_mjpeg", "bigram_lm", "merge_upsert", "zorder_layout",
-    "aggregate_global", "smb_transform",
-]
-
 
 def main(names):
     import __spark_entry__ as ent
@@ -34,7 +26,7 @@ def main(names):
     spark = build_session()
     qs = ent.queries()
     print(f"{'query':28s} {'exch':>4} {'hash/rng':>8} joins")
-    for name in names:
+    for name in names or qs:
         df = qs[name](spark, "/root/testdata/sf0.001")
         plan = lint.executed_plan(df)
         exch = plan.count("Exchange")
@@ -58,4 +50,4 @@ def main(names):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:] or TOP_COMPUTE)
+    main(sys.argv[1:])

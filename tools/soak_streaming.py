@@ -26,13 +26,6 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-QUERIES = [
-    "processing_time_panes",
-    "watermark_panes",
-    "refreshing_side_input",
-    "allowed_lateness",
-]
-
 
 def main():
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 5
@@ -52,7 +45,7 @@ def main():
         return sorted(tuple(r) for r in rows)
 
     failed = False
-    for name in QUERIES:
+    for name in ent.SOAK:
         fn, sql = ent.queries()[name], ent.oracle_sql()[name]
         bad = []
         for i in range(reps):
