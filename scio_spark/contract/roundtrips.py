@@ -456,8 +456,8 @@ FROM customer WHERE c_custkey % 4 = 0 GROUP BY c_mktsegment
 
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned MERGE INTO on a plain-parquet table
-    (operators/merge.py — the table-format-less upsert primitive, same
-    mechanics as maintain_rollup's continuous upsert): target = orders
+    (operators/merge.py — the table-format-less upsert primitive that
+    maintain_rollup's continuous upsert also calls): target = orders
     partitioned by o_orderstatus; the source updates every 100th order's
     price and inserts new orders into a brand-new partition. Only touched
     partitions are rewritten (pinned byte-identical in

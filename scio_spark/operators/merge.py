@@ -2,9 +2,9 @@
 
 Beyond-reference table-maintenance primitive. The reference leaves table
 upserts to the warehouse (BigQuery MERGE) or a table format; on a plain
-parquet lake the idiomatic mechanics are the ones
-``streaming.core.maintain_rollup`` uses for its continuous aggregate —
-this module generalizes them into a batch API:
+parquet lake this module is the one upsert path: batch callers use it
+directly, and ``streaming.core.maintain_rollup`` calls ``merge_into`` once
+per epoch for its continuous aggregate. The pruned path:
 
 1. find the partitions the source touches (small distinct collect),
 2. read ONLY those partitions of the target (``isin`` on the partition
@@ -12,8 +12,10 @@ this module generalizes them into a batch API:
 3. anti-join out the matched keys, union the source rows,
 4. write the merged partitions to a sibling temp dir (fully distributed,
    one file per partition directory via repartition(part_col)),
-5. swap each partition directory in with Hadoop-FS renames — idempotent
-   under retry, atomic per partition.
+5. swap each partition directory in with Hadoop-FS renames (live dir
+   aside → new dir in → drop the aside) — idempotent under retry, atomic
+   per partition; ``_recover_swap`` repairs a crashed swap on the next
+   call.
 
 Without a partition column the operation degrades to a documented full
 rewrite — still distributed, swapped in with a crash-recoverable rename

@@ -41,6 +41,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scio_spark.operators.merge import merge_into
+
 
 def ensure_event_time(stream: DataFrame, ts_col: str) -> DataFrame:
     """Normalize an event-time column to TIMESTAMP, which ``withWatermark``
@@ -172,18 +174,26 @@ def maintain_rollup(
     continuous-aggregate pattern): a streaming windowed aggregation whose
     updates are upserted into a time-partitioned parquet table.
 
-    Mechanism: update-mode aggregation → foreachBatch merges each epoch's
-    changed window rows with the surviving rows of the affected partitions,
-    writes the merged partitions to a sibling temp dir (a fully distributed
-    write — no row passes through the driver), then swaps each partition
-    directory into the table with Hadoop-FS renames. Only the partitions
-    touched by the epoch are rewritten — the existing-rows read is
-    statically pruned to the affected directories, so the table's history
-    is never re-scanned. The epoch is evaluated once; state metrics count
-    each row once. A retried epoch redoes the same swap (idempotent —
-    exactly-once with a checkpoint). At 100 TB this is the standard way to
-    keep a queryable aggregate fresh without re-scanning history; with a
-    table format available (Delta/Iceberg) the swap becomes a MERGE.
+    Mechanism: update-mode aggregation → foreachBatch upserts each epoch's
+    changed window rows with ``operators.merge.merge_into`` on
+    (``window_start``, keys…), partitioned by the table's partition column
+    (a function of ``window_start``, so the pruned-merge contract holds).
+    Only the partitions touched by the epoch are read and rewritten (the
+    existing-rows read is statically pruned to the affected directories,
+    so the table's history is never re-scanned); the merged partitions are
+    written to a sibling temp dir (a fully distributed write — no row
+    passes through the driver) and swapped in with Hadoop-FS renames. The
+    epoch is evaluated once; state metrics count each row once.
+
+    Recovery: each partition swap renames the live dir aside, renames the
+    new one in, then deletes the aside, so a crash never leaves a partition
+    on neither path. A replayed epoch (restart from ``checkpoint``) enters
+    ``merge_into``, whose ``_recover_swap`` first restores any aside dir
+    that has no live replacement (or drops one that does), then re-merges
+    the epoch's rows into the intact table — exactly-once with a
+    checkpoint. At 100 TB this is the standard way to keep a queryable
+    aggregate fresh without re-scanning history; with a table format
+    available (Delta/Iceberg) the swap becomes a MERGE.
 
     ``partition_by``: directory granularity of the table.
     - ``"day"`` (default): dirs are ``window_date=YYYY-MM-DD`` holding that
@@ -213,66 +223,7 @@ def maintain_rollup(
         # makes the first action the epoch's only evaluation.
         batch_df.persist()
         try:
-            # the affected partition list is small by construction (bounded by
-            # the windows an epoch can touch under the watermark); collecting it
-            # doubles as the emptiness check — one job instead of two per epoch
-            affected = [
-                r[part_col] for r in batch_df.select(part_col).distinct().collect()
-            ]
-            if not affected:
-                return
-            spark = batch_df.sparkSession
-            jvm = spark._jvm
-            HPath = jvm.org.apache.hadoop.fs.Path
-            target = HPath(path)
-            fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-            # explicit existence check — a transient read failure must propagate
-            # (and retry the micro-batch), never be mistaken for "first epoch"
-            # and destroy partition contents with a partial overwrite
-            table_exists = bool(fs.globStatus(HPath(path, part_col + "=*")))
-            # merge semantics: keep existing rows of the affected partitions
-            # whose (window, key) was NOT updated this epoch, union the updates
-            # (update mode emits only changed keys — a bare partition overwrite
-            # would drop the unchanged ones)
-            merged = batch_df
-            if table_exists:
-                merge_on = ["window_start"] + key_cols
-                # isin on the partition column statically prunes the scan to
-                # the affected directories — the table's history is never
-                # re-scanned. The table holds exactly the columns this upsert
-                # writes, so the epoch's schema reads it without a footer-
-                # inference job.
-                existing = (
-                    spark.read.schema(batch_df.schema)
-                    .parquet(path)
-                    .filter(F.col(part_col).isin(affected))
-                )
-                keep = existing.join(batch_df.select(*merge_on), merge_on, "left_anti")
-                merged = batch_df.unionByName(keep.select(*batch_df.columns))
-            tmp = path.rstrip("/") + f"__epoch_tmp_{epoch_id}"
-            tmp_path = HPath(tmp)
-            if fs.exists(tmp_path):  # leftover from a failed attempt of this epoch
-                fs.delete(tmp_path, True)
-            # co-locate each partition's rows in one task → one file per
-            # partition directory (otherwise every shuffle task writes a sliver
-            # file into every partition it holds — O(tasks × partitions) files)
-            (
-                merged.repartition(part_col)
-                .write.mode("overwrite")
-                .partitionBy(part_col)
-                .parquet(tmp)
-            )
-            if not fs.exists(target):
-                fs.mkdirs(target)
-            for st in fs.listStatus(tmp_path):
-                name = st.getPath().getName()
-                if not name.startswith(part_col + "="):
-                    continue
-                dest = HPath(target, name)
-                if fs.exists(dest):
-                    fs.delete(dest, True)
-                fs.rename(st.getPath(), dest)
-            fs.delete(tmp_path, True)
+            merge_into(path, batch_df, ["window_start", *key_cols], part_col)
         finally:
             batch_df.unpersist()
 
@@ -381,29 +332,32 @@ def pane_sink(
     return writer.start()
 
 
-def write_epoch_trace(query, path: str) -> int:
-    """Append (epoch, event_max) rows from the query's recentProgress to
-    ``<path>__epochs`` — one tiny row per micro-batch (the driver holds batch
-    METADATA only, never pane rows). Idempotent under overlap: label_panes
-    dedups by epoch. Returns the number of rows written."""
+def _event_max_by_epoch(progress) -> dict:
+    """``batchId → eventTime.max`` (naive datetime) over StreamingQuery
+    progress entries, each a dict, a JSON string or a progress object;
+    batches without an event-time max (no data) are skipped."""
     import datetime as dt
     import json as _json
 
-    rows = []
-    for p in query.recentProgress:
+    out = {}
+    for p in progress:
         d = p if isinstance(p, dict) else _json.loads(
             p if isinstance(p, str) else p.json
         )
         et = d.get("eventTime") or {}
         if "max" in et:
-            rows.append(
-                (
-                    int(d["batchId"]),
-                    dt.datetime.fromisoformat(
-                        et["max"].replace("Z", "+00:00")
-                    ).replace(tzinfo=None),
-                )
-            )
+            out[int(d["batchId"])] = dt.datetime.fromisoformat(
+                et["max"].replace("Z", "+00:00")
+            ).replace(tzinfo=None)
+    return out
+
+
+def write_epoch_trace(query, path: str) -> int:
+    """Append (epoch, event_max) rows from the query's recentProgress to
+    ``<path>__epochs`` — one tiny row per micro-batch (the driver holds batch
+    METADATA only, never pane rows). Idempotent under overlap: label_panes
+    dedups by epoch. Returns the number of rows written."""
+    rows = list(_event_max_by_epoch(query.recentProgress).items())
     if rows:
         spark = SparkSession.getActiveSession()
         spark.createDataFrame(
@@ -600,6 +554,31 @@ def element_count_panes(
     )
 
 
+def _keyed_windows(
+    stream: DataFrame,
+    ts_col: str,
+    window_duration: str,
+    allowed_lateness: str,
+    key_cols: list[str],
+) -> tuple[DataFrame, str]:
+    """The keying step of the windowed pane operators: watermark the stream
+    by ``allowed_lateness`` and tag each row with its tumbling window's
+    ``window_start`` and ``__window_end_ms`` (epoch millis, the event-time
+    timeout target). Returns the frame and the DDL of the grouping key
+    (keys..., window_start) that leads each operator's output schema."""
+    w = F.window(F.col(ts_col), window_duration)
+    with_win = (
+        stream.withWatermark(ts_col, allowed_lateness)
+        .withColumn("window_start", w["start"])
+        .withColumn(
+            "__window_end_ms", (F.unix_timestamp(w["end"]) * 1000).cast("long")
+        )
+    )
+    dt = dict(with_win.dtypes)
+    key_schema = ", ".join(f"{c} {dt[c]}" for c in key_cols + ["window_start"])
+    return with_win, key_schema
+
+
 def discarding_panes(
     stream: DataFrame,
     ts_col: str,
@@ -632,21 +611,8 @@ def discarding_panes(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     key_cols = list(key_cols)
-    wm = stream.withWatermark(ts_col, allowed_lateness)
-    with_win = wm.withColumn(
-        "window_start", F.window(F.col(ts_col), window_duration)["start"]
-    ).withColumn(
-        "__window_end_ms",
-        (
-            F.unix_timestamp(
-                F.window(F.col(ts_col), window_duration)["end"]
-            )
-            * 1000
-        ).cast("long"),
-    )
-    dt = dict(with_win.dtypes)
-    key_schema = ", ".join(
-        f"{c} {dt[c]}" for c in key_cols + ["window_start"]
+    with_win, key_schema = _keyed_windows(
+        stream, ts_col, window_duration, allowed_lateness, key_cols
     )
     out_schema = (
         f"{key_schema}, pane_index long, pane_value long, total_so_far long"
@@ -730,9 +696,6 @@ def late_firing_panes(
     through ``pane_sink`` / ``run_pane_sink`` (foreachBatch append to a
     table; identical timing/pane_index labels reconstructed by
     ``label_panes`` as a batch job over the sink)."""
-    import datetime as dt
-    import json as _json
-
     agg = windowed_stream_agg(
         stream, ts_col, window_duration, allowed_lateness, list(key_cols), aggs
     )
@@ -748,26 +711,11 @@ def late_firing_panes(
     finally:
         q.stop()
 
-    def _as_dict(p):
-        if isinstance(p, dict):
-            return p
-        if isinstance(p, str):
-            return _json.loads(p)
-        return _json.loads(p.json)
-
-    max_by_epoch: dict[int, dt.datetime] = {}
-    for p in progress:
-        d = _as_dict(p)
-        et = d.get("eventTime") or {}
-        if "max" in et:
-            max_by_epoch[d["batchId"]] = dt.datetime.fromisoformat(
-                et["max"].replace("Z", "+00:00")
-            ).replace(tzinfo=None)
-
+    max_by_epoch = _event_max_by_epoch(progress)
     panes: list[dict] = []
     pane_counter: dict[tuple, int] = {}
     fired_on_time: set[tuple] = set()
-    running_max: dt.datetime | None = None
+    running_max = None
     for epoch_id, rows_ in sorted(captured, key=lambda t: t[0]):
         if epoch_id in max_by_epoch:
             m = max_by_epoch[epoch_id]
@@ -1113,18 +1061,9 @@ def watermark_panes(
         raise ValueError("watermark_panes: late_delay_ms must be >= 1")
     key_cols = list(key_cols)
     lateness_ms = _interval_ms(allowed_lateness)
-    wm = stream.withWatermark(ts_col, allowed_lateness)
-    with_win = wm.withColumn(
-        "window_start", F.window(F.col(ts_col), window_duration)["start"]
-    ).withColumn(
-        "__window_end_ms",
-        (
-            F.unix_timestamp(F.window(F.col(ts_col), window_duration)["end"])
-            * 1000
-        ).cast("long"),
+    with_win, key_schema = _keyed_windows(
+        stream, ts_col, window_duration, allowed_lateness, key_cols
     )
-    dt = dict(with_win.dtypes)
-    key_schema = ", ".join(f"{c} {dt[c]}" for c in key_cols + ["window_start"])
     out_schema = (
         f"{key_schema}, timing string, pane_index long, pane_value long, "
         "total_so_far long"

@@ -346,6 +346,76 @@ def test_maintain_rollup_per_window_partitioning(spark, tmp_path):
     assert got == {"red": 5, "blue": 3}
 
 
+def test_maintain_rollup_crash_mid_swap_then_replay(spark, tmp_path, monkeypatch):
+    """A crash after a live partition dir was renamed aside, before its
+    replacement was renamed in, loses no rows: the replayed epoch restores
+    the aside dir and re-merges, so blue's unchanged row survives."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from scio_spark.operators import merge
+    from scio_spark.streaming.core import maintain_rollup
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "rollup")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+
+    def add_file(n, rows):
+        spark.createDataFrame(rows, SCHEMA).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(f"{src}/b{n}")
+
+    def run():
+        stream = (
+            spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1)
+            .parquet(src + "/b*")
+        )
+        q = maintain_rollup(
+            stream, out, "event_time", "10 minutes", "1 hour", ["team"],
+            [F.sum("score").alias("total")], checkpoint=ckpt,
+            num_state_partitions=1,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return q
+
+    add_file(0, [("u1", "red", 5, ts(1)), ("u2", "blue", 3, ts(2))])
+    run()
+    (live,) = os.listdir(out)
+    aside = live + merge._OLD_SUFFIX
+
+    def crash(spark_, tmp, target, part_col):
+        os.rename(os.path.join(target, live), os.path.join(target, aside))
+        raise RuntimeError("crash between rename-aside and rename-in")
+
+    # epoch 1 updates red in the same window (and so the same partition)
+    add_file(1, [("u3", "red", 2, ts(4))])
+    monkeypatch.setattr(merge, "_swap_partitions", crash)
+    with pytest.raises(Exception, match="crash between rename-aside"):
+        run()
+    assert os.listdir(out) == [aside]
+    # the failed epoch has an offset entry and no commit: it is replayed
+    logged = {
+        d: {int(f) for f in os.listdir(os.path.join(ckpt, d)) if f.isdigit()}
+        for d in ("offsets", "commits")
+    }
+    failed = max(logged["offsets"])
+    assert failed not in logged["commits"]
+
+    monkeypatch.undo()
+    q = run()
+    assert [p.batchId for p in q.recentProgress if p.numInputRows] == [failed]
+    table = spark.read.parquet(out)
+    got = {(r["team"], r["window_start"].minute): r["total"] for r in table.collect()}
+    assert got == {("red", 0): 7, ("blue", 0): 3}
+    assert table.count() == 2
+    assert os.listdir(out) == [live]
+
+
 def test_continuous_rollup_stages_a_one_sided_split(spark, tmp_path):
     """The continuous_rollup contract query stages its events as two stream
     batches split at 2024-01-16 00:30; events all on one side leave the
