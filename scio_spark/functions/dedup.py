@@ -12,6 +12,28 @@ Four families, all shuffle-frugal and expressed in built-in DataFrame ops
 - **SimHash**: 16-bit sign-sum signature; banded self-join (4 bands × 4 bits)
   is *exact* for Hamming ≤ 3 by pigeonhole, then verified with bit_count.
 
+Every near-dup family here and its embedding siblings (similarity.py,
+semdedup.py, substr_dedup.py) is filter-and-verify: bucket candidates
+first, exact verification second. Each shared step has one home:
+
+- bucketed index tables (``stage_shingles``, ``stage_minhash_index``,
+  ``similarity.stage_embedding_lsh_index``, ``substr_dedup.stage_gram_index``)
+  are written by ``operators.smb.save_sorted_bucket``;
+- ``co_bucket_pairs`` is the (id_1 < id_2) self-join within a shared
+  shingle or band bucket: inverted index, MinHash bands, embedding bands;
+- ``incremental_probe`` (new batch vs staged index, plus new vs new)
+  serves ``incremental_lsh_candidates`` and
+  ``similarity.incremental_embedding_candidates``;
+- ``_exact_jaccard`` is the count-table verification of every Jaccard
+  path;
+- ``stage_bounded`` is the one checkpoint policy (incremental batches,
+  ``connected_components`` rounds);
+- the embedding threshold tail (margin, pair kernel, exact rescore) lives
+  in retrieval.py beside ``exact_topk``.
+
+SimHash keeps its own band join: it carries the signatures into the
+Hamming check.
+
 Cross-engine determinism: hashes are md5 strings (identical in Spark and
 DuckDB); minhash = lexicographic MIN over md5 strings, which is a valid
 min-hash under any total order on a uniform hash family.
@@ -28,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scio_spark.functions.text import normalized_text
+from scio_spark.operators.merge import _fs
+from scio_spark.operators.smb import save_sorted_bucket
 
 HEX = "0123456789abcdef"
 
@@ -122,20 +146,59 @@ def cap_shingle_frequency(
     return sh.join(keep, "s", "left_semi")
 
 
-def _verify_exact_jaccard(
-    sh: DataFrame, cands: DataFrame, id_col: str, min_jaccard: float
-) -> DataFrame:
-    """Exact Jaccard over the FULL (uncapped) shingle sets, computed only
-    for candidate pairs — shared by the LSH and capped-inverted-index
-    paths, so frequency capping never changes emitted jaccard values."""
-    a = sh.withColumnRenamed(id_col, "id_1")
-    b = sh.withColumnRenamed(id_col, "id_2")
-    inter = (
-        cands.join(a, "id_1")
-        .join(b, ["id_2", "s"])
-        .groupBy("id_1", "id_2")
-        .agg(F.count(F.lit(1)).alias("inter"))
+def co_bucket_pairs(df: DataFrame, id_col: str, keys: str | list[str]) -> DataFrame:
+    """(id_1, id_2) with id_1 < id_2 for every two rows of ``df`` that share
+    ``keys`` — the one co-bucket self-join behind the shingle inverted
+    index, the MinHash and embedding LSH bands and both incremental probes'
+    new-vs-new side. Callers that need distinct pairs add ``.distinct()``
+    (a pair can share several buckets)."""
+    a = df.withColumnRenamed(id_col, "id_1")
+    b = df.withColumnRenamed(id_col, "id_2")
+    return (
+        a.join(b, keys)
+        .filter(F.col("id_1") < F.col("id_2"))
+        .select("id_1", "id_2")
     )
+
+
+def incremental_probe(
+    new: DataFrame, index: DataFrame, id_col: str, keys: list[str]
+) -> DataFrame:
+    """Distinct (id_1 < id_2) candidate pairs of a NEW batch: the batch's
+    bucket rows joined to a staged bucket index on ``keys``, plus the
+    batch's own co-bucket pairs. Shared by ``incremental_lsh_candidates``
+    and ``similarity.incremental_embedding_candidates``; ``new`` is read
+    three times, so callers pass it materialized (``stage_bounded``)."""
+    vs_corpus = (
+        new.withColumnRenamed(id_col, "id_a")
+        .join(index.withColumnRenamed(id_col, "id_b"), keys)
+        .filter(F.col("id_a") != F.col("id_b"))
+        .select(
+            F.least("id_a", "id_b").alias("id_1"),
+            F.greatest("id_a", "id_b").alias("id_2"),
+        )
+    )
+    return vs_corpus.unionByName(co_bucket_pairs(new, id_col, keys)).distinct()
+
+
+def _exact_jaccard(
+    sh: DataFrame,
+    id_col: str,
+    min_jaccard: float,
+    cands: DataFrame | None = None,
+) -> DataFrame:
+    """Exact Jaccard over the FULL (uncapped) shingle sets: (id_1, id_2,
+    jaccard) ≥ ``min_jaccard``. With ``cands`` (the LSH and capped
+    inverted-index paths) only those pairs are counted, so frequency
+    capping never changes emitted jaccard values; without, every
+    co-shingled pair is (``jaccard_pairs``)."""
+    if cands is None:
+        shared = co_bucket_pairs(sh, id_col, "s")
+    else:
+        a = sh.withColumnRenamed(id_col, "id_1")
+        b = sh.withColumnRenamed(id_col, "id_2")
+        shared = cands.join(a, "id_1").join(b, ["id_2", "s"])
+    inter = shared.groupBy("id_1", "id_2").agg(F.count(F.lit(1)).alias("inter"))
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     ca = counts.withColumnRenamed(id_col, "id_1").withColumnRenamed("n", "n1")
     cb = counts.withColumnRenamed(id_col, "id_2").withColumnRenamed("n", "n2")
@@ -166,26 +229,7 @@ def jaccard_pairs(
     (corpus-sized at 100 TB), so they get no broadcast hint — AQE
     broadcasts them at small scale from the observed size and falls back
     to a shuffle join at corpus scale."""
-    counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.withColumnRenamed(id_col, "id_1")
-    b = sh.withColumnRenamed(id_col, "id_2")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("id_1") < F.col("id_2"))
-        .groupBy("id_1", "id_2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    ca = counts.withColumnRenamed(id_col, "id_1").withColumnRenamed("n", "n1")
-    cb = counts.withColumnRenamed(id_col, "id_2").withColumnRenamed("n", "n2")
-    j = (
-        inter.join(ca, "id_1")
-        .join(cb, "id_2")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")),
-        )
-    )
-    return j.filter(F.col("jaccard") >= min_jaccard).select("id_1", "id_2", "jaccard")
+    return _exact_jaccard(sh, id_col, min_jaccard)
 
 
 def stage_shingles(
@@ -204,14 +248,7 @@ def stage_shingles(
     corpus or re-shuffling (the same mechanism as operators/smb.py).
     Returns the staged table as a DataFrame; pass it to the dedup entry
     points via ``shingles_df=``."""
-    sh = shingles(df, id_col, text_col, n)
-    (
-        sh.write.mode("overwrite")
-        .bucketBy(buckets, "s")
-        .sortBy("s")
-        .saveAsTable(table)
-    )
-    return df.sparkSession.table(table)
+    return save_sorted_bucket(shingles(df, id_col, text_col, n), table, "s", buckets)
 
 
 def ngram_jaccard_dedup(
@@ -238,15 +275,8 @@ def ngram_jaccard_dedup(
     if max_doc_freq is None:
         return jaccard_pairs(sh, id_col, min_jaccard)
     capped = cap_shingle_frequency(sh, max_doc_freq, id_col)
-    a = capped.withColumnRenamed(id_col, "id_1")
-    b = capped.withColumnRenamed(id_col, "id_2")
-    cands = (
-        a.join(b, "s")
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
-    )
-    return _verify_exact_jaccard(sh, cands, id_col, min_jaccard)
+    cands = co_bucket_pairs(capped, id_col, "s").distinct()
+    return _exact_jaccard(sh, id_col, min_jaccard, cands)
 
 
 # ------------------------------------------------------------------ MinHash
@@ -311,14 +341,7 @@ def lsh_candidate_pairs(
     # and the bands are cheap to recompute relative to simhash's) — leave
     # the diamond to the optimizer
     exploded = minhash_bands(sig, id_col, k, bands)
-    a = exploded.withColumnRenamed(id_col, "id_1")
-    b = exploded.withColumnRenamed(id_col, "id_2")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
-    )
+    return co_bucket_pairs(exploded, id_col, ["band", "bucket"]).distinct()
 
 
 def minhash_lsh_dedup(
@@ -361,7 +384,7 @@ def minhash_lsh_dedup(
         else sh
     )
     cands = lsh_candidate_pairs(minhash_signature(sig_src, id_col, k), id_col, k, bands)
-    return _verify_exact_jaccard(sh, cands, id_col, min_jaccard)
+    return _exact_jaccard(sh, id_col, min_jaccard, cands)
 
 
 # ------------------------------------------------------------------ SimHash
@@ -478,18 +501,25 @@ def simhash_dedup(
 
 
 def stage_bounded(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Materialize a BOUNDED (O(batch)-by-design) intermediate that the
-    caller references several times — the incremental-dedup staging point
-    shared by the MinHash / embedding-LSH / semantic batch paths.
+    """Materialize an intermediate that the caller references several
+    times and cut its lineage — the module's one checkpoint policy: the
+    O(batch) staging point of the MinHash / embedding-LSH / semantic
+    incremental paths, and every ``connected_components`` round.
     Default: ``localCheckpoint`` (executor-memory blocks; re-adjudicated
     r16 under the cold protocol vs lazy persist and vs no materialization
     — see OPTIMIZATION_r16.md). On a CLUSTER pass ``checkpoint_dir``
     (shared storage) for a reliable ``DataFrame.checkpoint`` that
     survives executor loss (ADVICE r15: the eager localCheckpoint sites
     truncate lineage, so an executor loss otherwise fails the query
-    instead of recomputing) — the same knob connected_components takes."""
+    instead of recomputing)."""
     if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        sc = df.sparkSession.sparkContext
+        # setCheckpointDir makes a fresh subdirectory on every call: set it
+        # once per checkpoint_dir, not once per staged intermediate
+        _, path, fs = _fs(df.sparkSession, checkpoint_dir)
+        current = (sc.getCheckpointDir() or "").rsplit("/", 1)[0]
+        if current != fs.makeQualified(path).toString():
+            sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint()
     return df.localCheckpoint()
 
@@ -536,9 +566,6 @@ def connected_components(
     (Kiveris et al., "Connected Components in MapReduce") halves rounds for
     high-diameter graphs; dup graphs are shallow, so the simple form wins
     on constant factors."""
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
     # r16 note: a lazy-persist variant of this staging (cache instead of
     # localCheckpoint, materialized by the mass-check aggs) was built and
     # cold-A/B'd — it LOST badly (dedup_clusters 6.9/3.8 -> 11-53 s
@@ -548,24 +575,25 @@ def connected_components(
     # The eager localCheckpoint-per-round form below is the measured
     # winner; the plan-truncation property it provides is also what keeps
     # deep (20+ round) graphs analyzer-safe.
-    def ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
     # Materialize the incoming pair list BEFORE the symmetrize-union: the
     # union references it twice, and Spark re-executes a non-materialized
     # subtree per reference — when ``pairs`` is an expensive dedup
     # pipeline (shingle index + jaccard verify), that doubled the whole
     # upstream cost (measured r13: 161 s -> 55 s for dedup_clusters at
     # sf1, where pair generation dominates).
-    e = ckpt(pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    edges = ckpt(
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
+    e = stage_bounded(
+        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")), checkpoint_dir
     )
-    labels = ckpt(
+    edges = stage_bounded(
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct(),
+        checkpoint_dir,
+    )
+    labels = stage_bounded(
         edges.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("comp", F.col("node"))
+        .withColumn("comp", F.col("node")),
+        checkpoint_dir,
     )
     def label_mass(lbl: DataFrame):
         # exact decimal sum — labels are monotonically non-increasing, so
@@ -588,12 +616,11 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("nbr_comp").alias("nbr_comp"))
         )
-        new_labels = ckpt(
-            labels.join(nbr_min, labels.node == nbr_min.a, "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.col("nbr_comp")).alias("comp"),
-            )
+        new_labels = stage_bounded(
+            labels.join(nbr_min, labels.node == nbr_min.a, "left").select(
+                "node", F.least(F.col("comp"), F.col("nbr_comp")).alias("comp")
+            ),
+            checkpoint_dir,
         )
         new_mass = label_mass(new_labels)
         labels = new_labels
@@ -738,31 +765,18 @@ def stage_minhash_index(
     (band, bucket) — the historical side of INCREMENTAL dedup: a daily crawl
     batch dedups against years of corpus without ever re-shingling or
     re-signing the corpus. Append each accepted batch's bands to keep the
-    index current (saveAsTable append preserves the bucket spec)."""
+    index current (``smb.save_sorted_bucket(..., mode="append")`` keeps
+    the bucket spec)."""
     sh = shingles(df, id_col, text_col, n)
     banded = minhash_bands(minhash_signature(sh, id_col, k), id_col, k, bands)
-    # a previous session may have left the warehouse dir without the
-    # catalog entry — saveAsTable refuses to reuse the location (same
-    # guard as smb.save_sorted_bucket)
-    import shutil
-    from urllib.parse import urlparse
-
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
     # align writer tasks to buckets: repartition on the bucket columns uses
     # the same hash family as bucketBy, so each task holds whole buckets and
     # the table lands as ~`buckets` files instead of tasks × buckets tiny
     # files (32×64 = 2048 at the test shuffle width — measured 2x slower)
-    (
-        banded.repartition(buckets, F.col("band"), F.col("bucket"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "band", "bucket")
-        .sortBy("band", "bucket")
-        .saveAsTable(table)
+    return save_sorted_bucket(
+        banded.repartition(buckets, F.col("band"), F.col("bucket")),
+        table, ["band", "bucket"], buckets,
     )
-    return df.sparkSession.table(table)
 
 
 def incremental_lsh_candidates(
@@ -793,23 +807,7 @@ def incremental_lsh_candidates(
         minhash_bands(minhash_signature(sh, id_col, k), id_col, k, bands),
         checkpoint_dir,
     )
-    vs_corpus = (
-        new_bands.withColumnRenamed(id_col, "id_a")
-        .join(index.withColumnRenamed(id_col, "id_b"), ["band", "bucket"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_1"),
-            F.greatest("id_a", "id_b").alias("id_2"),
-        )
-    )
-    a = new_bands.withColumnRenamed(id_col, "id_1")
-    b = new_bands.withColumnRenamed(id_col, "id_2")
-    vs_new = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-    )
-    return vs_corpus.unionByName(vs_new).distinct()
+    return incremental_probe(new_bands, index, id_col, ["band", "bucket"])
 
 
 # ------------------------------------------------------ line-level dedup

@@ -19,6 +19,13 @@ Every search in similarity.py, ivf.py and pq.py is the same pipeline
 HNSW beams and LSH buckets generate candidates their own way and end in
 the same ``cut`` and ``rank_topk``.
 
+The near-dup searches (similarity.embedding_dedup_pairs, ``_lsh``,
+``incremental_embedding_dedup``) threshold instead of ranking, and share
+the **threshold tail**: the GEMM generators (block pairs, LSH buckets)
+keep every pair scoring at least ``threshold_margin`` with the one pair
+kernel ``margin_pairs``, and all three end in ``exact_threshold``, which
+fold-rescores the candidates, rounds, and keeps ``score >= threshold``.
+
 **Containment.** A row outside a block's cut cannot be in the final top-k
 if its block cut kept ``keep >= k + 1`` rows (k plus a possible
 self-match) at or above it: those rows outrank it in that block, so they
@@ -36,6 +43,13 @@ so the candidate set does not depend on row order or batch boundaries.
 Quantized scorers (SQ8, ADC) cut with margin 0 at ``k·oversample + 1``:
 their error against the exact score is unbounded, so they only gate
 recall, and the exhaustive regime (``keep`` ≥ block size) is exact.
+
+The threshold tail's margin is one-sided, because the cut compares each
+pair with a fixed threshold rather than with other rows:
+``threshold_margin`` lowers the threshold by half a rounding step (a fold
+score at ``threshold − 0.5·10^-d`` rounds up to the threshold) plus the
+GEMM-vs-fold drift, so every pair that passes the final filter survives
+the GEMM cut.
 
 **Broadcast rule.** ``F.broadcast`` is applied to a side only when it is
 a ``SideInput``, i.e. it passed the guard. Every other join is left to
@@ -439,3 +453,66 @@ def exact_topk(
         cands.join(side(queries), "query_id").join(side(corpus), "neighbor_id"),
         k, score_decimals,
     )
+
+
+# --------------------------------------------------------- threshold tail
+
+
+def threshold_margin(threshold: float, score_decimals: int | None) -> float:
+    """Candidate-keep floor of a threshold cut (module docstring): every
+    pair whose fold score can pass the final ``score >= threshold`` —
+    including round-half-up when ``score_decimals`` is set and GEMM-vs-fold
+    drift — scores at least this in the GEMM."""
+    if score_decimals is not None:
+        return threshold - 0.5 * 10.0 ** -score_decimals - 1e-9
+    return threshold - 1e-6
+
+
+#: GEMM entries per chunk of ``margin_pairs`` (32 MB of float64).
+PAIR_CHUNK = 4_194_304
+
+
+def margin_pairs(l_ids, l_mat, r_ids, r_mat, margin: float, same_rows: bool):
+    """The threshold cut's pair kernel: (id_1, id_2) with id_1 < id_2 for
+    every left × right row pair whose GEMM score is ≥ ``margin``. Left rows
+    are scored in chunks of ~``PAIR_CHUNK`` entries, so a block costs
+    O(len(r_mat) · dim) memory plus one chunk, whatever its size.
+    ``same_rows``: both sides hold the same rows (a diagonal block pair, an
+    LSH bucket), so each unordered pair is scored twice and kept once, from
+    its (smaller id, larger id) entry; self-pairs drop out."""
+    chunk = max(1, PAIR_CHUNK // max(1, len(r_ids)))
+    lo, hi = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    n_left = len(l_ids) if len(r_ids) else 0  # an empty side scores nothing
+    for s in range(0, n_left, chunk):
+        li, rj = np.nonzero(l_mat[s : s + chunk] @ r_mat.T >= margin)
+        a, b = l_ids[li + s], r_ids[rj]
+        if same_rows:
+            keep = a < b
+            a, b = a[keep], b[keep]
+        lo.append(np.minimum(a, b))
+        hi.append(np.maximum(a, b))
+    return pd.DataFrame({"id_1": np.concatenate(lo), "id_2": np.concatenate(hi)})
+
+
+def exact_threshold(
+    corpus: DataFrame,
+    cands: DataFrame,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    score_decimals: int | None,
+) -> DataFrame:
+    """The tail of every threshold entry point: join the (id_1, id_2)
+    candidates to both corpus vectors, fold-score (``_dot``, bit-identical
+    to the DuckDB oracle's ordered sum), round, and keep
+    ``score >= threshold``: (id_1, id_2, score)."""
+    a = corpus.select(F.col(id_col).alias("id_1"), F.col(vec_col).alias("__a"))
+    b = corpus.select(F.col(id_col).alias("id_2"), F.col(vec_col).alias("__b"))
+    scored = (
+        cands.join(a, "id_1")
+        .join(b, "id_2")
+        .withColumn("score", _dot(F.col("__a"), F.col("__b")))
+    )
+    if score_decimals is not None:
+        scored = scored.withColumn("score", F.round("score", score_decimals))
+    return scored.filter(F.col("score") >= threshold).select("id_1", "id_2", "score")

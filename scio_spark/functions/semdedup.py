@@ -19,7 +19,8 @@ Scale shape (100 TB):
 - assignment is one Arrow-batched GEMM pass (ivf.assign_centroid);
 - the within-cluster pair search is ONE shuffle on centroid id, then a
   per-cluster blocked GEMM (row blocks of 1024 against the cluster
-  matrix — peak memory O(block × cluster), never cluster²);
+  matrix — peak memory O(block × cluster), never cluster²), the
+  ``_mark_cluster`` kernel shared with ``incremental_semantic_dedup``;
 - a cluster larger than ``max_cluster_rows`` raises actionably (the knob
   is n_clusters: the paper sizes k ~ sqrt(n) so clusters stay bounded).
 
@@ -64,6 +65,51 @@ def _read_text(spark, path: str) -> str:
     return bytes(data).decode("utf-8")
 
 
+def _mark_cluster(
+    pdf: pd.DataFrame,
+    order: list[str],
+    n_ref: int,
+    id_col: str,
+    vec_col: str,
+    eps: float,
+    max_rows: int,
+    what: str,
+) -> pd.DataFrame:
+    """The one mark kernel of both SemDeDup paths, for one cluster: sort
+    the rows by ``order``, L2-normalize, and mark row r a duplicate iff an
+    EARLIER row is within ``eps`` cosine. The first ``n_ref`` rows after
+    the sort are reference rows (the staged index): compared against,
+    never returned. Rows are scored in blocks of 1024 against the whole
+    cluster matrix — peak memory O(1024 × cluster), never cluster²; a
+    cluster past ``max_rows`` fails actionably. Returns (id_col, centroid,
+    is_dup) for the rows after the reference rows."""
+    if len(pdf) > max_rows:
+        raise ValueError(
+            f"{what}: cluster {int(pdf['centroid'].iloc[0])} has {len(pdf)} "
+            f"rows > max_cluster_rows={max_rows}; increase n_clusters "
+            "(SemDeDup sizes k ~ sqrt(n); the incremental path fixes it when "
+            "the index is staged) or raise the cap explicitly"
+        )
+    pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
+    mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    n = len(mat)
+    is_dup = np.zeros(n, dtype=np.int32)
+    for lo in range(max(n_ref, 1), n, 1024):  # row 0 can never be a dup
+        hi = min(lo + 1024, n)
+        block = mat[lo:hi] @ mat.T  # (b, n)
+        # only EARLIER columns count (sorted ⇒ j < row index)
+        earlier = np.arange(n)[None, :] < np.arange(lo, hi)[:, None]
+        is_dup[lo:hi] = ((block >= eps) & earlier).any(axis=1)
+    return pd.DataFrame(
+        {
+            id_col: pdf[id_col].to_numpy()[n_ref:],
+            "centroid": pdf["centroid"].to_numpy(np.int32)[n_ref:],
+            "is_dup": is_dup[n_ref:],
+        }
+    )
+
+
 def semantic_dedup(
     df: DataFrame,
     id_col: str,
@@ -98,32 +144,9 @@ def semantic_dedup(
     )
 
     def mark(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_cluster_rows:
-            raise ValueError(
-                f"semantic_dedup: cluster {int(pdf['centroid'].iloc[0])} has "
-                f"{len(pdf)} rows > max_cluster_rows={max_cluster_rows}; "
-                "increase n_clusters (SemDeDup sizes k ~ sqrt(n)) or raise "
-                "the cap explicitly"
-            )
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        mat = mat / np.maximum(
-            np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-        )
-        n = len(mat)
-        is_dup = np.zeros(n, dtype=np.int32)
-        for lo in range(1, n, 1024):  # row 0 can never be a dup
-            hi = min(lo + 1024, n)
-            block = mat[lo:hi] @ mat.T  # (b, n)
-            # only columns with a SMALLER id count (sorted ⇒ j < row index)
-            for r in range(lo, hi):
-                is_dup[r] = 1 if (block[r - lo, :r] >= eps).any() else 0
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                "centroid": pdf["centroid"].astype("int32"),
-                "is_dup": is_dup,
-            }
+        return _mark_cluster(
+            pdf, [id_col], 0, id_col, vec_col, eps, max_cluster_rows,
+            "semantic_dedup",
         )
 
     return assigned.groupBy("centroid").applyInPandas(
@@ -217,27 +240,11 @@ def incremental_semantic_dedup(
     both = idx.unionByName(b.withColumn("__is_new", F.lit(1)))
 
     def mark(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_cluster_rows:
-            raise ValueError(
-                f"incremental_semantic_dedup: cluster "
-                f"{int(pdf['centroid'].iloc[0])} has {len(pdf)} rows > "
-                f"max_cluster_rows={max_cluster_rows}; increase n_clusters "
-                "when staging the index"
-            )
         # index rows first (they always precede the batch), then batch by id
-        pdf = pdf.sort_values(
-            ["__is_new", id_col], kind="mergesort"
-        ).reset_index(drop=True)
-        mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        new_pos = np.nonzero(pdf["__is_new"].to_numpy() == 1)[0]
-        is_dup = []
-        for r in new_pos:
-            sims = mat[r] @ mat[:r].T if r else np.empty(0)
-            is_dup.append(1 if (sims >= eps).any() else 0)
-        out = pdf.iloc[new_pos][[id_col, "centroid"]].copy()
-        out["is_dup"] = np.array(is_dup, dtype="int32")
-        return out
+        return _mark_cluster(
+            pdf, ["__is_new", id_col], int((pdf["__is_new"] == 0).sum()),
+            id_col, vec_col, eps, max_cluster_rows, "incremental_semantic_dedup",
+        )
 
     marked = both.groupBy("centroid").applyInPandas(
         mark,

@@ -16,7 +16,10 @@ generators:
   pure-numpy graph (functions/hnsw.py); ``ef_search=None`` is exhaustive
   and, with ``exact_rescore``, exact;
 - the embedding near-dup family (exact block-pair GEMM, banded LSH,
-  incremental staged index), which thresholds instead of ranking.
+  incremental staged index), which thresholds instead of ranking: its
+  candidates end in the core's threshold tail (``margin_pairs`` →
+  ``exact_threshold``), and its staged index and incremental probe are
+  dedup.py's (``save_sorted_bucket``, ``incremental_probe``).
 
 Embeddings in the fixture are L2-normalized, so cosine == dot product.
 """
@@ -28,8 +31,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scio_spark.operators.smb import save_sorted_bucket
+
 from . import retrieval as R
-from .retrieval import _dot
+from .dedup import incremental_probe, stage_bounded
 
 
 def cosine_topk(
@@ -121,29 +126,6 @@ def cosine_topk_sq8(
     return R.exact_topk(cands, qs, c, k, score_decimals)
 
 
-def _exact_rescore(
-    corpus: DataFrame,
-    cands: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    score_decimals: int | None,
-) -> DataFrame:
-    """Stage 2 shared by both candidate generators: deterministic
-    sequential-fold rescore of candidate pairs only, so emitted scores are
-    bit-identical to the DuckDB oracle's ordered ``list_reduce`` sum."""
-    a = corpus.select(F.col(id_col).alias("id_1"), F.col(vec_col).alias("__a"))
-    b = corpus.select(F.col(id_col).alias("id_2"), F.col(vec_col).alias("__b"))
-    scored = (
-        cands.join(a, "id_1")
-        .join(b, "id_2")
-        .withColumn("score", _dot(F.col("__a"), F.col("__b")))
-    )
-    if score_decimals is not None:
-        scored = scored.withColumn("score", F.round("score", score_decimals))
-    return scored.filter(F.col("score") >= threshold).select("id_1", "id_2", "score")
-
-
 def embedding_dedup_pairs(
     corpus: DataFrame,
     threshold: float,
@@ -161,22 +143,23 @@ def embedding_dedup_pairs(
 
     1. candidate generation — rows hash into ``num_blocks`` blocks; each of
        the B·(B+1)/2 unordered block pairs becomes one cogroup whose task
-       runs a numpy GEMM (left_block × right_blockᵀ) and keeps pairs above
-       a margin below the threshold. The margin covers BOTH error sources
-       between the GEMM and the final filter: GEMM-vs-fold float drift
-       (~1e-14) AND — when ``score_decimals`` is set — round-half-up at the
-       final rounding (a pair at threshold − 0.5·10^-d rounds up to the
-       threshold and must survive candidate generation; found at sf1,
-       where 15 of 96k pairs sat inside the old 1e-6 margin). Each
-       unordered id pair lands in exactly one block pair, so candidates
-       are emitted exactly once. Shuffle volume is O(n·B) rows and
-       per-task memory is O(n/B) vectors — raise ``num_blocks`` with
-       corpus size (B ≈ √tasks); exact all-pairs compute is inherently
-       O(n²), the LSH variant below is the sub-quadratic path.
-    2. exact rescoring via the shared deterministic fold.
+       runs the threshold tail's pair kernel (``retrieval.margin_pairs``:
+       left_block × right_blockᵀ GEMM) and keeps pairs at or above
+       ``retrieval.threshold_margin``, which covers GEMM-vs-fold drift AND
+       round-half-up at the final rounding (a pair at threshold −
+       0.5·10^-d rounds up to the threshold; found at sf1, where 15 of 96k
+       pairs sat inside the old 1e-6 margin). Each unordered id pair
+       lands in exactly one block pair, so candidates are emitted exactly
+       once. Shuffle volume is O(n·B) rows. A task holds its two blocks'
+       vectors, O(n/B) each, plus one GEMM chunk of ~4M scores
+       (``retrieval.PAIR_CHUNK``) — raise ``num_blocks`` with corpus size
+       (B ≈ √tasks); exact all-pairs compute is inherently O(n²), the LSH
+       variant below is the sub-quadratic path.
+    2. exact rescoring via the shared deterministic fold
+       (``retrieval.exact_threshold``).
     """
     spark = corpus.sparkSession
-    margin = _dedup_margin(threshold, score_decimals)
+    margin = R.threshold_margin(threshold, score_decimals)
     B = num_blocks
     slim = corpus.select(
         F.col(id_col).alias("__id"),
@@ -207,29 +190,19 @@ def embedding_dedup_pairs(
         )
     )
 
-    def gemm_pairs(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty or rpdf.empty:
-            return pd.DataFrame({"id_1": [], "id_2": []}).astype("int64")
-        l_ids = lpdf["__id"].to_numpy()
-        r_ids = rpdf["__rid"].to_numpy()
-        l_mat = np.array(list(lpdf["__v"]), dtype=np.float64)
-        r_mat = np.array(list(rpdf["__rv"]), dtype=np.float64)
-        sims = l_mat @ r_mat.T
-        li, rj = np.where(sims >= margin)
-        a, b = l_ids[li], r_ids[rj]
-        keep = a != b  # diagonal blocks contain each id on both sides
-        a, b = a[keep], b[keep]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        out = pd.DataFrame({"id_1": lo, "id_2": hi})
-        # within a diagonal block each pair shows up as (x,y) and (y,x)
-        return out.drop_duplicates()
+    def gemm_pairs(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        return R.margin_pairs(
+            lpdf["__id"].to_numpy(np.int64), R._mat(lpdf["__v"], np.float64),
+            rpdf["__rid"].to_numpy(np.int64), R._mat(rpdf["__rv"], np.float64),
+            margin, same_rows=key[0] == key[1],
+        )
 
     cands = (
         left.groupBy("blk_a", "blk_b")
         .cogroup(right.groupBy("rka", "rkb"))
         .applyInPandas(gemm_pairs, "id_1 long, id_2 long")
     )
-    return _exact_rescore(corpus, cands, threshold, id_col, vec_col, score_decimals)
+    return R.exact_threshold(corpus, cands, threshold, id_col, vec_col, score_decimals)
 
 
 def band_signatures(
@@ -300,27 +273,13 @@ def stage_embedding_lsh_index(
     (the vector analog of dedup.stage_minhash_index): a daily embedding
     batch dedups against the full corpus without the corpus ever being
     re-signed or re-shuffled. Append each accepted batch's signatures to
-    keep the index current (saveAsTable append preserves the bucket
-    spec)."""
-    import shutil
-    from urllib.parse import urlparse
-
+    keep the index current (``smb.save_sorted_bucket(..., mode="append")``
+    keeps the bucket spec)."""
     sigs = band_signatures(corpus, id_col, vec_col, bands, band_bits, dim)
-    spark = corpus.sparkSession
-    # a previous session may have left the warehouse dir without the
-    # catalog entry — saveAsTable refuses to reuse the location (same
-    # guard as stage_minhash_index / smb.save_sorted_bucket)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
-    (
-        sigs.repartition(buckets, F.col("band"), F.col("sig"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "band", "sig")
-        .sortBy("band", "sig")
-        .saveAsTable(table)
+    return save_sorted_bucket(
+        sigs.repartition(buckets, F.col("band"), F.col("sig")),
+        table, ["band", "sig"], buckets,
     )
-    return spark.table(table)
 
 
 def incremental_embedding_candidates(
@@ -348,29 +307,11 @@ def incremental_embedding_candidates(
     # un-checkpointed reference re-runs the scan + signature GEMM. The
     # batch is O(day) × bands rows — bounded by design. Re-adjudicated
     # r16 cold (VERDICT r15 item 1) vs lazy persist and vs none: kept.
-    from scio_spark.functions.dedup import stage_bounded
-
     new_sigs = stage_bounded(
         band_signatures(new_vecs, id_col, vec_col, bands, band_bits, dim),
         checkpoint_dir,
     )
-    vs_corpus = (
-        new_sigs.withColumnRenamed("__id", "id_a")
-        .join(index.withColumnRenamed("__id", "id_b"), ["band", "sig"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_1"),
-            F.greatest("id_a", "id_b").alias("id_2"),
-        )
-    )
-    a = new_sigs.select(F.col("__id").alias("id_1"), "band", "sig")
-    b = new_sigs.select(F.col("__id").alias("id_2"), "band", "sig")
-    vs_new = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-    )
-    return vs_corpus.unionByName(vs_new).distinct()
+    return incremental_probe(new_sigs, index, "__id", ["band", "sig"])
 
 
 def incremental_embedding_dedup(
@@ -395,7 +336,7 @@ def incremental_embedding_dedup(
         new_vecs, index, id_col, vec_col, bands, band_bits, dim,
         checkpoint_dir,
     )
-    return _exact_rescore(
+    return R.exact_threshold(
         corpus_vecs, cands, threshold, id_col, vec_col, score_decimals
     )
 
@@ -489,22 +430,11 @@ def embedding_dedup_pairs_lsh(
             corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")),
             "__id",
         ),
-        _dedup_margin(threshold, score_decimals),
+        R.threshold_margin(threshold, score_decimals),
         max_bucket_rows,
         expected_rows=n_est * bands,
     ).distinct()
-    return _exact_rescore(corpus, cands, threshold, id_col, vec_col, score_decimals)
-
-
-def _dedup_margin(threshold: float, score_decimals: int | None) -> float:
-    """Candidate-keep floor shared by the exact block-pair GEMM and the
-    LSH bucket GEMM: anything whose true fold score can pass the final
-    ``score >= threshold`` filter — including round-half-up when
-    ``score_decimals`` is set (the sf1 class fixed in r14) plus
-    GEMM-vs-fold float drift — must survive candidate generation."""
-    if score_decimals is not None:
-        return threshold - 0.5 * 10.0 ** -score_decimals - 1e-9
-    return threshold - 1e-6
+    return R.exact_threshold(corpus, cands, threshold, id_col, vec_col, score_decimals)
 
 
 #: Target signature rows per packed shuffle group in
@@ -524,8 +454,9 @@ def _bucket_gemm_candidates(
     """(id_1 < id_2) near-dup candidates from banded LSH collision
     buckets, cut by a per-bucket numpy GEMM instead of materializing the
     full collision set: one task per (band, sig) bucket computes the
-    bucket's upper-triangle cosine block and keeps only pairs at or above
-    ``margin`` (see _dedup_margin). The random-collision volume
+    bucket's cosine block with the threshold tail's pair kernel
+    (``retrieval.margin_pairs``) and keeps only pairs at or above
+    ``margin`` (``retrieval.threshold_margin``). The random-collision volume
     Θ(bands·n²/2^band_bits) therefore never exists as shuffled candidate
     ROWS — only as flops inside tasks — and the deterministic fold
     rescore downstream touches survivors alone (~the true near-dup count),
@@ -553,29 +484,6 @@ def _bucket_gemm_candidates(
     empty = pd.DataFrame({"id_1": pd.Series(dtype="int64"),
                           "id_2": pd.Series(dtype="int64")})
 
-    def one_bucket(band, sig, ids, mat):
-        n = len(ids)
-        if n > max_bucket_rows:
-            raise ValueError(
-                f"_bucket_gemm_candidates: collision bucket (band={band}, "
-                f"sig={sig}) has {n} rows > max_bucket_rows="
-                f"{max_bucket_rows}; increase band_bits (or lower "
-                "target_bucket_rows with band_bits=None) so buckets stay "
-                "task-sized, or raise max_bucket_rows deliberately."
-            )
-        chunk = max(1, 4_194_304 // n)
-        out = []
-        for s in range(0, n, chunk):
-            sims = mat[s : s + chunk] @ mat.T
-            li, rj = np.where(sims >= margin)
-            li = li + s
-            keep = li < rj  # ids are distinct within a bucket
-            a, b = ids[li[keep]], ids[rj[keep]]
-            out.append(
-                pd.DataFrame({"id_1": np.minimum(a, b), "id_2": np.maximum(a, b)})
-            )
-        return out
-
     def pack_pairs(_key, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return empty
@@ -583,13 +491,17 @@ def _bucket_gemm_candidates(
         for (band, sig), grp in pdf.groupby(["band", "sig"], sort=False):
             if len(grp) < 2:
                 continue
-            out.extend(
-                one_bucket(
-                    band, sig,
-                    grp["__id"].to_numpy(),
-                    np.array(list(grp["__v"]), dtype=np.float64),
+            if len(grp) > max_bucket_rows:
+                raise ValueError(
+                    f"_bucket_gemm_candidates: collision bucket (band={band}, "
+                    f"sig={sig}) has {len(grp)} rows > max_bucket_rows="
+                    f"{max_bucket_rows}; increase band_bits (or lower "
+                    "target_bucket_rows with band_bits=None) so buckets stay "
+                    "task-sized, or raise max_bucket_rows deliberately."
                 )
-            )
+            ids = grp["__id"].to_numpy(np.int64)
+            mat = R._mat(grp["__v"], np.float64)
+            out.append(R.margin_pairs(ids, mat, ids, mat, margin, same_rows=True))
         return pd.concat(out, ignore_index=True) if out else empty
 
     # Pack count derives from the DATA (rows per group ≈ the target,

@@ -13,10 +13,13 @@ gets the same n-gram-resolution answer with bounded shuffles:
 2. first occurrence per gram = ``min(doc_id * 2^24 + pos)`` (one encoded
    BIGINT — hash-aggregable with map-side combine), deliberately NOT a
    row_number window: a hot boilerplate gram would make a per-gram sort
-   skew-bound, while min() stays mergeable no matter how hot the gram,
+   skew-bound, while min() stays mergeable no matter how hot the gram
+   (``_first_occurrences``, shared by the full pass, the staged gram index
+   and the incremental batch),
 3. later occurrences (anti-first) → per-doc interval merge of their
    [pos, pos+n-1] spans with the classic islands pattern (running max over
-   a per-doc window — the only per-doc sort, bounded by doc length),
+   a per-doc window — the only per-doc sort, bounded by doc length)
+   (``_span_tail``, shared by the full and the incremental pass),
 4. mark (span list + duplicated-token count) or strip (rebuild text
    without marked token indexes).
 
@@ -33,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from scio_spark.operators.smb import save_sorted_bucket
 
 from .text import tokens
 
@@ -124,44 +129,42 @@ def _positional_ngrams(
     return out
 
 
-def mark_duplicate_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 50,
-    min_count: int = 2,
-    hash_grams: bool = False,
+def _enc():
+    """(doc_id, pos) as ONE encoded BIGINT, id * 2^24 + pos."""
+    return (F.col("_id") * _ENC_BASE) + F.col("pos")
+
+
+def _first_occurrences(
+    occ: DataFrame, first: str = "first_enc", cnt: str = "cnt"
 ) -> DataFrame:
-    """Per doc: merged duplicated-span list and token counts. Returns
-    (id_col, spans array<struct<start,end>>, n_dup_tokens, n_tokens) with
-    one row per input doc (docs with no duplicates: empty list, 0).
-
-    First-occurrence-wins: the globally first (doc_id, pos) occurrence of
-    each duplicated gram is NOT marked, so stripping never deletes the
-    canonical copy."""
-    from scio_spark.fanout import fan_out_scan
-
-    df = fan_out_scan(df)  # positional n-gram explode runs pre-shuffle
-    occ = _positional_ngrams(df, id_col, text_col, n, hash_grams)
-    # first occurrence + occurrence count per gram — one partial-agg'd
-    # shuffle on gram; immune to hot-gram skew (min/count are mergeable).
-    # (doc_id, pos) is encoded into ONE BIGINT (id * 2^24 + pos) so the
-    # aggregate is a plain numeric MIN: min(struct) plans as SortAggregate
-    # (a full sort of every gram on both sides of the shuffle) while the
-    # encoded min stays HashAggregate with map-side combine (both gram-
-    # sort passes drop out of the plan). Bounds (documented contract, same family as
-    # sortValues' memory contract): pos < 2^24 tokens per document
-    # (~100 MB of text) and doc ids < 2^39 — far beyond a 100 TB corpus's
-    # ~2×10^10 docs. Lexicographic (id, pos) order == numeric order of the
-    # encoding within those bounds.
-    enc = (F.col("_id") * _ENC_BASE) + F.col("pos")
-    firsts = occ.groupBy("gram").agg(
-        F.min(enc).alias("first_enc"),
-        F.count(F.lit(1)).alias("cnt"),
+    """(gram, first, cnt): each gram's first occurrence and occurrence
+    count — one partial-agg'd shuffle on gram; immune to hot-gram skew
+    (min/count are mergeable). The MIN is over the encoded BIGINT
+    (``_enc``), so it stays a HashAggregate with map-side combine where
+    min(struct) would sort every gram on both sides of the shuffle; the
+    encoding's bounds are documented at ``_ENC_BASE`` (lexicographic
+    (id, pos) order == numeric order within them)."""
+    return occ.groupBy("gram").agg(
+        F.min(_enc()).alias(first), F.count(F.lit(1)).alias(cnt)
     )
+
+
+def _span_tail(
+    df: DataFrame,
+    occ: DataFrame,
+    firsts: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    min_count: int,
+) -> DataFrame:
+    """From occurrences ``occ`` and per-gram (gram, first_enc, cnt) to the
+    marked-span rows of every doc of ``df``: the occurrences of grams seen
+    ≥ ``min_count`` times, minus each gram's first, merged into per-doc
+    spans and joined back to the docs (no duplicates: empty list, 0)."""
     dup = (
         occ.join(firsts.filter(F.col("cnt") >= min_count), "gram")
-        .filter(enc != F.col("first_enc"))
+        .filter(_enc() != F.col("first_enc"))
         .select("_id", "pos", (F.col("pos") + n - 1).alias("end"))
     )
     # islands: a new span starts where pos exceeds the running max end of
@@ -197,6 +200,28 @@ def mark_duplicate_spans(
     )
 
 
+def mark_duplicate_spans(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 50,
+    min_count: int = 2,
+    hash_grams: bool = False,
+) -> DataFrame:
+    """Per doc: merged duplicated-span list and token counts. Returns
+    (id_col, spans array<struct<start,end>>, n_dup_tokens, n_tokens) with
+    one row per input doc (docs with no duplicates: empty list, 0).
+
+    First-occurrence-wins: the globally first (doc_id, pos) occurrence of
+    each duplicated gram is NOT marked, so stripping never deletes the
+    canonical copy."""
+    from scio_spark.fanout import fan_out_scan
+
+    df = fan_out_scan(df)  # positional n-gram explode runs pre-shuffle
+    occ = _positional_ngrams(df, id_col, text_col, n, hash_grams)
+    return _span_tail(df, occ, _first_occurrences(occ), id_col, text_col, n, min_count)
+
+
 def stage_gram_index(
     df: DataFrame,
     table: str,
@@ -215,27 +240,7 @@ def stage_gram_index(
     is ~10× smaller than n-token strings and collision odds are
     dedup-grade."""
     occ = _positional_ngrams(df, id_col, text_col, n, hash_grams)
-    firsts = occ.groupBy("gram").agg(
-        F.min((F.col("_id") * _ENC_BASE) + F.col("pos")).alias("first_enc"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    # a previous session may have left the warehouse dir without the
-    # catalog entry — saveAsTable refuses to reuse the location (same
-    # workaround as operators/smb.py save_sorted_bucket)
-    import shutil
-    from urllib.parse import urlparse
-
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
-    (
-        firsts.write.mode("overwrite")
-        .bucketBy(num_buckets, "gram")
-        .sortBy("gram")
-        .saveAsTable(table)
-    )
-    return spark.table(table)
+    return save_sorted_bucket(_first_occurrences(occ), table, "gram", num_buckets)
 
 
 def incremental_duplicate_spans(
@@ -274,51 +279,13 @@ def incremental_duplicate_spans(
     # O(batch tokens) rows and materializing it costs more than
     # re-running the explode. Leave the diamond to the optimizer.
     occ = _positional_ngrams(batch, id_col, text_col, n, hash_grams)
-    enc = (F.col("_id") * _ENC_BASE) + F.col("pos")
-    batch_firsts = occ.groupBy("gram").agg(
-        F.min(enc).alias("_batch_first"),
-        F.count(F.lit(1)).alias("_batch_cnt"),
-    )
-    g = batch_firsts.join(idx, "gram", "left")
+    g = _first_occurrences(occ, "_batch_first", "_batch_cnt").join(idx, "gram", "left")
     merged = g.select(
         "gram",
         F.coalesce("_corpus_first", "_batch_first").alias("first_enc"),
         (F.coalesce("_corpus_cnt", F.lit(0)) + F.col("_batch_cnt")).alias("cnt"),
     )
-    dup = (
-        occ.join(merged.filter(F.col("cnt") >= min_count), "gram")
-        .filter(enc != F.col("first_enc"))
-        .select("_id", "pos", (F.col("pos") + n - 1).alias("end"))
-    )
-    w = Window.partitionBy("_id").orderBy("pos")
-    prev_max = F.max("end").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    islands = (
-        dup.withColumn(
-            "brk",
-            F.when(prev_max.isNull() | (F.col("pos") > prev_max + 1), 1).otherwise(0),
-        )
-        .withColumn("island", F.sum("brk").over(w))
-        .groupBy("_id", "island")
-        .agg(F.min("pos").alias("start"), F.max("end").alias("end"))
-    )
-    per_doc = islands.groupBy("_id").agg(
-        F.sort_array(F.collect_list(F.struct("start", "end"))).alias("spans"),
-        F.sum(F.col("end") - F.col("start") + 1).alias("n_dup_tokens"),
-    )
-    base = batch.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_t")
-    ).select(id_col, F.size("_t").alias("n_tokens"))
-    return (
-        base.join(per_doc.withColumnRenamed("_id", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(
-                "spans", F.array().cast("array<struct<start:int,end:int>>")
-            ).alias("spans"),
-            F.coalesce("n_dup_tokens", F.lit(0)).cast("long").alias("n_dup_tokens"),
-            F.col("n_tokens").cast("long"),
-        )
-    )
+    return _span_tail(batch, occ, merged, id_col, text_col, n, min_count)
 
 
 def strip_duplicate_spans(

@@ -25,6 +25,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scio_spark.operators.merge import _fs
+
 
 def save_sorted_bucket(
     df: DataFrame,
@@ -33,26 +35,30 @@ def save_sorted_bucket(
     num_buckets: int = 16,
     sort_cols: Sequence[str] | str | None = None,
     mode: str = "overwrite",
-) -> None:
+) -> DataFrame:
     """saveAsSortedBucket (smb/syntax/SortMergeBucketSCollectionSyntax.scala:53):
-    write as a bucketed+sorted managed table. ``sort_cols`` beyond the key =
-    secondary sort (BucketMetadata.java:76-79)."""
+    write as a bucketed+sorted managed table and return it. ``sort_cols``
+    beyond the key = secondary sort (BucketMetadata.java:76-79).
+
+    The one bucketed-table writer: the dedup indexes (``stage_shingles``,
+    ``stage_minhash_index``, ``stage_embedding_lsh_index``,
+    ``stage_gram_index``) write through it too. On overwrite it first
+    deletes a leftover ``<warehouse>/<table>`` location that has no
+    catalog entry (a previous session's), which ``saveAsTable`` would
+    refuse with LOCATION_ALREADY_EXISTS; the delete goes through the
+    Hadoop FileSystem API, so it works on hdfs:// and s3a:// warehouses."""
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     sort_cols = (
         key_cols
         if sort_cols is None
         else [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
     )
+    spark = df.sparkSession
     if mode == "overwrite":
-        # a previous session may have left the warehouse dir without the
-        # catalog entry — saveAsTable refuses to reuse the location
-        import shutil
-        from urllib.parse import urlparse
-
-        spark = df.sparkSession
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
+        wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+        _, loc, fs = _fs(spark, f"{wh}/{table.lower()}")
+        fs.delete(loc, True)
     (
         df.write.mode(mode)
         .bucketBy(num_buckets, *key_cols)
@@ -60,6 +66,7 @@ def save_sorted_bucket(
         .format("parquet")
         .saveAsTable(table)
     )
+    return spark.table(table)
 
 
 def sort_merge_join(

@@ -40,6 +40,25 @@ def test_keep_candidates_short_row_keeps_everything():
     assert list(keep_candidates(row, 7, 0.0)) == [0, 1]
 
 
+def test_margin_pairs_chunked_same_rows_and_cross(monkeypatch):
+    """The threshold tail's pair kernel: one (id_1 < id_2) row per
+    unordered pair at or above the margin, whatever the chunking; an empty
+    side scores nothing."""
+    from scio_spark.functions import retrieval as R
+
+    ids = np.array([7, 3, 5, 1])
+    mat = np.array([[1.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.6, 0.8]])
+    want_same = {(3, 7), (1, 5), (1, 3), (1, 7)}  # scores 1.0, 0.8, 0.6, 0.6
+    for chunk in (R.PAIR_CHUNK, 8, 4):  # 8 entries = two left rows per chunk
+        monkeypatch.setattr(R, "PAIR_CHUNK", chunk)
+        got = R.margin_pairs(ids, mat, ids, mat, 0.6, same_rows=True)
+        assert sorted(map(tuple, got.to_numpy())) == sorted(want_same)
+        cross = R.margin_pairs(ids[:2], mat[:2], ids[2:], mat[2:], 0.6, False)
+        assert sorted(map(tuple, cross.to_numpy())) == [(1, 3), (1, 7)]
+    empty = R.margin_pairs(ids, mat, ids[:0], np.empty(0), 0.0, False)
+    assert empty.empty and list(empty.dtypes) == [np.int64, np.int64]
+
+
 def test_cut_margin_values():
     # 2x eps (ADVICE r15): the kept-vs-dropped compare is between two
     # rescored values, each drifting from its GEMM score in opposite

@@ -611,6 +611,8 @@ def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
     assert reliable == local == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     walked = [f for _, _, fs in os.walk(ckdir) for f in fs]
     assert walked  # reliable checkpoints materialized under checkpoint_dir
+    # every round stages through stage_bounded: one checkpoint subdir in all
+    assert len(os.listdir(ckdir)) == 1
 
 
 def test_cosine_topk_hnsw_parity(embeddings):

@@ -265,6 +265,13 @@ TOP_COMPUTE_BUDGETS = {
     # node, but the collision volume no longer exists as shuffled rows.
     "dedup_embedding_lsh": (5, "BroadcastHashJoin"),
     "ann_ivf_streamed": (5, "FlatMapCoGroupsInPandas"),
+    # the rest of the near-dup family (block-pair GEMM, staged-index
+    # probe, SemDeDup full and incremental), pinned before they moved onto
+    # the shared threshold tail, incremental probe and mark kernel
+    "dedup_embedding": (6, "BroadcastHashJoin"),
+    "incremental_embedding_dedup": (5, "BroadcastHashJoin"),
+    "semantic_dedup": (2, None),
+    "semantic_dedup_incremental": (2, None),
 }
 
 

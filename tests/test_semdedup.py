@@ -60,12 +60,28 @@ def test_stats_roll_up(spark):
     assert all(r.n_dups <= r.n_items for r in stats)
 
 
-def test_oversized_cluster_raises_actionably(spark):
+def test_oversized_cluster_raises_actionably(spark, tmp_path):
+    """Both SemDeDup paths share the cluster cap: the full pass and the
+    incremental pass against a staged index."""
+    from scio_spark.functions.semdedup import (
+        incremental_semantic_dedup,
+        stage_semantic_index,
+    )
+
     emb = _load(spark)
     cents = [list(r.embedding) for r in emb.orderBy("vec_id").limit(2).collect()]
     with pytest.raises(Exception, match="max_cluster_rows"):
         semantic_dedup(
             emb, "vec_id", "embedding", centroids=cents, max_cluster_rows=10
+        ).collect()
+    path = str(tmp_path / "semidx")
+    stage_semantic_index(
+        emb.filter("vec_id < 400"), "vec_id", "embedding", cents, path
+    )
+    with pytest.raises(Exception, match="max_cluster_rows"):
+        incremental_semantic_dedup(
+            emb.filter("vec_id >= 400"), path, "vec_id", "embedding",
+            max_cluster_rows=10, append=False,
         ).collect()
 
 
