@@ -68,17 +68,22 @@ class HnswIndex:
         After _repair_connectivity this is every row; computed rather
         than assumed so the exhaustive-search shortcut stays honest."""
         if self._reach is None:
-            seen = {self.entry}
-            stack = [self.entry]
-            while stack:
-                c = stack.pop()
-                for v in self.adj[0].get(c, ()):
-                    if v not in seen:
-                        seen.add(v)
-                        stack.append(v)
-            self._reach = np.fromiter(seen, np.int64, len(seen))
-            self._reach.sort()
+            reached = np.zeros(self.n, bool)
+            _mark_reachable(self.adj[0], self.entry, reached)
+            self._reach = np.flatnonzero(reached).astype(np.int64)
         return self._reach
+
+
+def _mark_reachable(adj0, start, reached) -> None:
+    """Set ``reached`` for every node reachable from ``start`` at layer 0."""
+    stack = [start]
+    reached[start] = True
+    while stack:
+        c = stack.pop()
+        for v in adj0.get(c, ()):
+            if not reached[v]:
+                reached[v] = True
+                stack.append(v)
 
 
 def _search_layer(mat, adj_l, q, eps, ef):
@@ -118,27 +123,15 @@ def _repair_connectivity(mat, adj0, entry):
     """Make every node reachable from ``entry`` at layer 0: BFS, then
     bridge each unreached component to its exact nearest reached node
     (bidirectional edge, never pruned — one extra edge per component)."""
-    n = mat.shape[0]
-    reached = np.zeros(n, bool)
-
-    def bfs(start):
-        stack = [start]
-        reached[start] = True
-        while stack:
-            c = stack.pop()
-            for v in adj0.get(c, ()):
-                if not reached[v]:
-                    reached[v] = True
-                    stack.append(v)
-
-    bfs(entry)
+    reached = np.zeros(mat.shape[0], bool)
+    _mark_reachable(adj0, entry, reached)
     while not reached.all():
         u = int(np.flatnonzero(~reached)[0])
         pool = np.flatnonzero(reached)
         best = int(pool[np.argmax(mat[pool] @ mat[u])])
         adj0.setdefault(u, []).append(best)
         adj0.setdefault(best, []).append(u)
-        bfs(u)
+        _mark_reachable(adj0, u, reached)
 
 
 def build_hnsw(

@@ -11,17 +11,24 @@ DataFrames:
   matrix (plan size constant in n_clusters);
 - persist: a centroid-partitioned parquet table, so a probe is a
   partition-pruned read;
-- search: the retrieval core (functions/retrieval.py) with the GEMM
-  scorer — routed broadcast queries (``route_queries`` + ``scan``) or a
-  salted centroid cogroup (``cogroup``) — then the exact rescore and rank.
+- search: ``ivf_candidates``, the one routing step of every IVF search
+  here and every IVF-PQ search in pq.py (only the scorer, the cut and the
+  list columns differ): routed broadcast queries (``route_queries`` +
+  the core's ``scan``) or distributed probes (``probe_centroids``, plus
+  ``probed_centroids`` for a persisted index) in the core's salted
+  centroid ``cogroup`` (functions/retrieval.py). The entry points keep
+  their own centroids, scorer and tail — the exact rescore and rank.
   With n_probe = n_clusters the output is exact top-k.
 """
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from . import retrieval as R
 
@@ -82,64 +89,47 @@ def _centroids(
     return [list(map(float, c)) for c in model.clusterCenters()]
 
 
-def _with_centroid(df: DataFrame):
-    from pyspark.sql.types import IntegerType, StructField, StructType
+def _nearest_centroids(df: DataFrame, vec_col: str, centroids, p: int) -> DataFrame:
+    """Each row → its p nearest centroids by cosine (vectors normalized ⇒
+    max dot product), the row replicated p× with a ``centroid`` column;
+    ties go to the lower centroid id (argmax / stable argsort).
 
+    One numpy GEMM per Arrow batch against the broadcast centroid matrix:
+    a literal-expression argmax works at k≈16 but the generated code grows
+    O(k·dim) and blows past the JIT/codegen limits at realistic k
+    (256–4096); the GEMM keeps the plan size constant in k."""
+    bc = df.sparkSession.sparkContext.broadcast(np.array(centroids, dtype=np.float64))
     # fresh StructType — StructType.add mutates the DataFrame's cached schema
-    return StructType(
-        list(df.schema.fields) + [StructField("centroid", IntegerType())]
-    )
-
-
-def assign_centroid(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
-    """Nearest centroid by cosine (vectors normalized ⇒ max dot product):
-    one numpy GEMM per Arrow batch against the broadcast centroid matrix.
-
-    A literal-expression argmax works at k≈16 but the generated code grows
-    O(k·dim) and blows past the JIT/codegen limits at realistic k (256–4096);
-    the GEMM keeps the plan size constant in k."""
-    cent = np.array(centroids, dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast(cent)
-    schema = _with_centroid(df)
+    schema = StructType(list(df.schema.fields) + [StructField("centroid", IntegerType())])
 
     def gen(batches):
         c = bc.value
+        n = min(p, c.shape[0])
         for pdf in batches:
-            pdf = pdf.copy()
-            if pdf.empty:
-                pdf["centroid"] = np.array([], dtype="int32")
-            else:
-                mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-                pdf["centroid"] = np.argmax(mat @ c.T, axis=1).astype("int32")
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
-
-
-def probe_centroids(df: DataFrame, vec_col: str, centroids: list[list[float]], n_probe: int) -> DataFrame:
-    """Each query row → its n_probe nearest centroid ids (row replicated
-    n_probe×), via the same broadcast-GEMM pattern; ties broken by lower
-    centroid id (stable argsort) for deterministic probing."""
-    cent = np.array(centroids, dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast(cent)
-    schema = _with_centroid(df)
-
-    def gen(batches):
-        c = bc.value
-        p = min(n_probe, c.shape[0])
-        for pdf in batches:
-            if pdf.empty:
-                pdf = pdf.copy()
-                pdf["centroid"] = np.array([], dtype="int32")
-                yield pdf
-                continue
+            # numpy only: a reference to this package would make every
+            # Python worker that runs the assignment import it
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            idx = np.argsort(-(mat @ c.T), axis=1, kind="stable")[:, :p]
-            out = pdf.loc[pdf.index.repeat(p)].copy()
+            sims = mat.reshape(len(pdf), c.shape[1]) @ c.T  # (0, k) if empty
+            if n == 1:
+                idx, out = np.argmax(sims, axis=1), pdf.copy()
+            else:
+                idx = np.argsort(-sims, axis=1, kind="stable")[:, :n]
+                out = pdf.loc[pdf.index.repeat(n)].copy()
             out["centroid"] = idx.reshape(-1).astype("int32")
             yield out
 
     return df.mapInPandas(gen, schema)
+
+
+def assign_centroid(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
+    """Each row with its nearest centroid (``centroid``)."""
+    return _nearest_centroids(df, vec_col, centroids, 1)
+
+
+def probe_centroids(df: DataFrame, vec_col: str, centroids: list[list[float]], n_probe: int) -> DataFrame:
+    """Each query row → its n_probe nearest centroid ids (row replicated
+    n_probe×) — deterministic probing."""
+    return _nearest_centroids(df, vec_col, centroids, n_probe)
 
 
 def route_queries(queries: R.SideInput, cents: list[list[float]], n_probe: int) -> dict:
@@ -162,6 +152,58 @@ def probed_centroids(probes: DataFrame) -> list[int]:
     return sorted(r["centroid"] for r in probes.select("centroid").distinct().collect())
 
 
+def ivf_candidates(
+    queries: DataFrame,
+    cents: list[list[float]],
+    n_probe: int,
+    lists: DataFrame | str,
+    scorer,
+    keep: int,
+    margin: float,
+    what: str,
+    streamed: bool = False,
+    max_query_rows: int = 100_000,
+    corpus_blocks: int = 1,
+    max_group_rows: int = 2_000_000,
+    cols=("neighbor_id", "__cv", "centroid"),
+):
+    """The IVF routing step of every IVF and IVF-PQ search: route the
+    (query_id, __qv) ``queries`` to their ``n_probe`` nearest centroids
+    and meet the probed inverted lists in a core placement with
+    ``scorer``'s (keep, margin) cut.
+
+    ``lists`` is an in-memory corpus (neighbor_id, __cv), assigned to
+    ``cents`` here, or the path of a centroid-partitioned index, read
+    with a ``centroid IN (probed)`` partition filter (the probed list is
+    a literal, so it is collected for a streamed search). ``cols`` are
+    the lists' columns the scorer reads, centroid included.
+
+    Default: the queries are a guarded side input (``max_query_rows``),
+    routed on the driver (``route_queries``) into the routed ``scan``.
+    ``streamed``: they stay a DataFrame, routed by ``probe_centroids``
+    into the salted ``cogroup`` (``corpus_blocks`` / ``max_group_rows``).
+    Returns (candidates, the query side, the lists)."""
+    spark = queries.sparkSession
+    if streamed:
+        probes = probe_centroids(queries, "__qv", cents, n_probe)
+    else:
+        queries = R.side_input(queries, max_query_rows, what, "max_query_rows")
+        routes = route_queries(queries, cents, n_probe)
+    if isinstance(lists, DataFrame):
+        idx = assign_centroid(lists, "__cv", cents)
+    else:
+        probed = probed_centroids(probes) if streamed else sorted(routes)
+        idx = spark.read.parquet(lists).filter(F.col("centroid").isin(probed))
+    if streamed:
+        cands = R.cogroup(
+            probes, idx.select(*cols), scorer, keep, margin, corpus_blocks,
+            max_group_rows, what,
+        )
+    else:
+        cands = R.scan(idx.select(*cols), queries, scorer, keep, margin, routes)
+    return cands, queries, idx
+
+
 def write_small_json(spark, dir_path: str, obj: dict) -> None:
     """Persist a driver-sized metadata record (index centroids /
     codebooks) as ``<dir>/part-00000.json`` through the Hadoop FileSystem
@@ -173,8 +215,6 @@ def write_small_json(spark, dir_path: str, obj: dict) -> None:
     layout (a directory of ``*.json`` line files) is unchanged, so
     ``spark.read.json(dir)`` remains a valid consumer for external
     tooling."""
-    import json
-
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(dir_path.rstrip("/") + "/part-00000.json")
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -193,8 +233,6 @@ def read_small_json(spark, dir_path: str) -> dict:
     resolution; also reads multi-part ``part-*.json`` directories written
     by a DataFrame writer (older indexes), merging records
     last-one-wins per key (the record is a single row in practice)."""
-    import json
-
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(dir_path.rstrip("/"))
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -255,8 +293,6 @@ def build_ivf_index(
     )
     assigned = assign_centroid(corpus.select(id_col, vec_col), vec_col, cents)
     assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
-    import json
-
     write_small_json(
         corpus.sparkSession,
         path.rstrip("/") + "__centroids",
@@ -283,8 +319,6 @@ def append_ivf_index(
     recall at fixed n_probe drifts only if the data distribution drifts
     from the training sample, and n_probe = n_clusters remains provably
     exact — so rebuild on distribution change, append otherwise."""
-    import json
-
     meta = read_small_json(spark, path.rstrip("/") + "__centroids")
     cents = json.loads(meta["centroids"])
     assigned = assign_centroid(new_vecs.select(id_col, vec_col), vec_col, cents)
@@ -318,39 +352,18 @@ def search_ivf_index(
     cogroup, so nothing query-sized passes through the driver or a
     broadcast; per-task memory is bounded by ``corpus_blocks`` /
     ``max_group_rows`` (retrieval.cogroup)."""
-    import json
-
     cents = json.loads(
         read_small_json(spark, path.rstrip("/") + "__centroids")["centroids"]
     )
-    margin = R.cut_margin(score_decimals)
-
-    def lists(probed):
-        return (
-            spark.read.parquet(path)
-            .filter(F.col("centroid").isin(list(probed)))
-            .select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("__cv"),
-                "centroid",
-            )
-        )
-
-    q = R.as_queries(queries, id_col, vec_col)
-    if streamed:
-        probes = probe_centroids(q, "__qv", cents, n_probe)
-        inv = lists(probed_centroids(probes))
-        cands = R.cogroup(
-            probes, inv, R.Gemm(), k + 4, margin, corpus_blocks,
-            max_group_rows, "search_ivf_index",
-        )
-    else:
-        q = R.side_input(q, max_query_rows, "search_ivf_index", "max_query_rows")
-        routes = route_queries(q, cents, n_probe)
-        inv = lists(sorted(routes))
-        cands = R.scan(inv, q, R.Gemm(), k + 4, margin, routes)
+    cands, q, idx = ivf_candidates(
+        R.as_queries(queries, id_col, vec_col), cents, n_probe, path,
+        R.Gemm(), k + 4, R.cut_margin(score_decimals), "search_ivf_index",
+        streamed, max_query_rows, corpus_blocks, max_group_rows,
+        (F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"),
+         "centroid"),
+    )
     return R.exact_topk(
-        cands, q, inv.select("neighbor_id", "__cv"), k, score_decimals
+        cands, q, R.as_corpus(idx, id_col, vec_col), k, score_decimals
     )
 
 
@@ -377,18 +390,15 @@ def cosine_topk_ivf(
     batch is grouped by centroid and GEMM-scored against the queries
     probing it, and the top-(k+4) candidates are exact-fold rescored and
     ranked. With n_probe = n_clusters the output is exact top-k."""
-    qs = R.side_input(
-        R.as_queries(queries, id_col, vec_col), max_query_rows,
-        "cosine_topk_ivf", "max_query_rows",
-    )
     cents = _centroids(
         corpus, vec_col, n_clusters, seed, sample_fraction, max_iter,
         init_mode, trainer, train_rows_cap,
     )
     c = R.as_corpus(corpus, id_col, vec_col)
-    cands = R.scan(
-        assign_centroid(c, "__cv", cents), qs, R.Gemm(), k + 4,
-        R.cut_margin(score_decimals), route_queries(qs, cents, n_probe),
+    cands, qs, _ = ivf_candidates(
+        R.as_queries(queries, id_col, vec_col), cents, n_probe, c, R.Gemm(),
+        k + 4, R.cut_margin(score_decimals), "cosine_topk_ivf",
+        max_query_rows=max_query_rows,
     )
     return R.exact_topk(cands, qs, c, k, score_decimals)
 
@@ -422,12 +432,10 @@ def cosine_topk_ivf_streamed(
         corpus, vec_col, n_clusters, seed, sample_fraction, max_iter,
         init_mode, trainer, train_rows_cap,
     )
-    q = R.as_queries(queries, id_col, vec_col)
     c = R.as_corpus(corpus, id_col, vec_col)
-    cands = R.cogroup(
-        probe_centroids(q, "__qv", cents, n_probe),
-        assign_centroid(c, "__cv", cents),
-        R.Gemm(), k + 4, R.cut_margin(score_decimals), corpus_blocks,
-        max_group_rows, "cosine_topk_ivf_streamed",
+    cands, q, _ = ivf_candidates(
+        R.as_queries(queries, id_col, vec_col), cents, n_probe, c, R.Gemm(),
+        k + 4, R.cut_margin(score_decimals), "cosine_topk_ivf_streamed", True,
+        corpus_blocks=corpus_blocks, max_group_rows=max_group_rows,
     )
     return R.exact_topk(cands, q, c, k, score_decimals)

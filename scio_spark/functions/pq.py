@@ -16,15 +16,27 @@ searches are compositions of the retrieval core (functions/retrieval.py):
 ADC candidates at k·oversample, an exact re-cut where the queries are a
 side input, then the exact float rescore and rank — so returned scores
 are exact and the codes only gate candidate recall (pinned in tests).
+The IVF-PQ searches route and place through ivf.py's ``ivf_candidates``,
+the same routing step as the GEMM IVF searches, with the ``Adc`` scorer.
 """
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import retrieval as R
+from .ivf import (
+    _centroids,
+    assign_centroid,
+    ivf_candidates,
+    read_small_json,
+    write_small_json,
+)
 
 
 def _kmeans_np(x: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
@@ -92,8 +104,6 @@ def pq_encode(
     code_col: str = "pq_code",
 ) -> DataFrame:
     """(id, pq_code binary): m bytes per vector — the stored index."""
-    import pandas as pd
-
     bc = corpus.sparkSession.sparkContext.broadcast(codebooks)
 
     def gen(batches):
@@ -120,11 +130,12 @@ def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
     return codes
 
 
-class Adc:
+class Adc(R.Gemm):
     """PQ asymmetric-distance scorer: a query block is the per-query
     m × n_codes table of subvector·codeword dots; a corpus block is the
     rows' codes — stored ``pq_code`` bytes, or ``__cv`` vectors encoded
-    in-task — and a score is m table lookups."""
+    in-task — and a score is m table lookups (the cut's rows come from
+    ``score`` as for ``Gemm``)."""
 
     def __init__(self, books: np.ndarray):
         self.books = books
@@ -191,17 +202,12 @@ def cosine_topk_ivfpq(
     AND each scored vector costs m byte-lookups instead of d multiplies —
     the two savings are independent and multiply. Output contract matches
     cosine_topk (exact scores on survivors)."""
-    from .ivf import _centroids, assign_centroid, route_queries
-
-    qs = R.side_input(
-        R.as_queries(queries, id_col, vec_col), max_query_rows,
-        "cosine_topk_ivfpq", "max_query_rows",
-    )
     cents = _centroids(corpus, vec_col, n_clusters, seed, 1.0)
     c = R.as_corpus(corpus, id_col, vec_col)
-    cands = R.scan(
-        assign_centroid(c, "__cv", cents), qs, Adc(codebooks),
-        k * oversample + 1, 0.0, route_queries(qs, cents, n_probe),
+    cands, qs, _ = ivf_candidates(
+        R.as_queries(queries, id_col, vec_col), cents, n_probe, c,
+        Adc(codebooks), k * oversample + 1, 0.0, "cosine_topk_ivfpq",
+        max_query_rows=max_query_rows,
     )
     return R.exact_topk(cands, qs, c, k, score_decimals)
 
@@ -261,16 +267,12 @@ def cosine_topk_ivfpq_streamed(
     corpus block in-task and scores it against ADC tables of its probing
     queries (per-task memory bounded by ``corpus_blocks`` /
     ``max_group_rows``, retrieval.cogroup)."""
-    from .ivf import _centroids, assign_centroid, probe_centroids
-
     cents = _centroids(corpus, vec_col, n_clusters, seed, 1.0)
-    q = R.as_queries(queries, id_col, vec_col)
     c = R.as_corpus(corpus, id_col, vec_col)
-    cands = R.cogroup(
-        probe_centroids(q, "__qv", cents, n_probe),
-        assign_centroid(c, "__cv", cents),
-        Adc(codebooks), k * oversample + 1, 0.0, corpus_blocks,
-        max_group_rows, "cosine_topk_ivfpq_streamed",
+    cands, q, _ = ivf_candidates(
+        R.as_queries(queries, id_col, vec_col), cents, n_probe, c,
+        Adc(codebooks), k * oversample + 1, 0.0, "cosine_topk_ivfpq_streamed",
+        True, corpus_blocks=corpus_blocks, max_group_rows=max_group_rows,
     )
     return R.exact_topk(cands, q, c, k, score_decimals)
 
@@ -295,14 +297,10 @@ def build_pq_index(
     (id, pq_code) — m+8 bytes/row, e.g. 16 B at m=8 vs 264 B for a
     64-dim float32 row — and the exact rescore reads the vector column
     for candidate rows alone. Returns the trained codebooks."""
-    import json
-
     spark = corpus.sparkSession
     books = train_pq_codebooks(
         corpus, vec_col, m, n_codes, iters, seed, train_rows_cap
     )
-    from .ivf import write_small_json
-
     write_small_json(
         spark, path.rstrip("/") + "__codebooks",
         {"codebooks": json.dumps(books.tolist())},
@@ -315,10 +313,6 @@ def build_pq_index(
 
 def load_pq_codebooks(spark, path: str) -> np.ndarray:
     """Read back the codebooks persisted by build_pq_index."""
-    import json
-
-    from .ivf import read_small_json
-
     meta = read_small_json(spark, path.rstrip("/") + "__codebooks")
     return np.array(json.loads(meta["codebooks"]), dtype=np.float32)
 
@@ -338,8 +332,6 @@ def _encode_with_vec(
     codes quantize the RESIDUAL x − centroid[assignment] (classic IVFPQ;
     requires 'centroid' in passthrough) — the stored vector column stays
     the raw vector either way."""
-    import pandas as pd
-
     vec_type = df.schema[vec_col].dataType.simpleString()
     extra = ", ".join(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in passthrough
@@ -476,32 +468,22 @@ def build_ivfpq_index(
     residual-ADC estimate by a per-list constant, and every candidate
     cut in this module is per-list, so candidate sets — and the exact
     rescore on raw vectors — are computed identically."""
-    import json
-
-    from .ivf import _centroids, assign_centroid
-
     spark = corpus.sparkSession
     cents = _centroids(
         corpus, vec_col, n_clusters, seed, sample_fraction, max_iter,
         train_rows_cap=train_rows_cap,
     )
     cmat = np.array(cents, dtype=np.float32)
-    if residual:
-        sample = corpus.select(vec_col).limit(train_rows_cap).collect()
-        x = np.array([r[0] for r in sample], dtype=np.float32)
+    sample = corpus.select(vec_col).limit(train_rows_cap).collect()
+    x = np.array([r[0] for r in sample], dtype=np.float32)
+    if residual:  # train_pq_codebooks on the residuals
         x = x - cmat[np.argmax(x @ cmat.T, axis=1)]
-        books = _fit_codebooks(x, m, n_codes, iters, seed)
-    else:
-        books = train_pq_codebooks(
-            corpus, vec_col, m, n_codes, iters, seed, train_rows_cap
-        )
+    books = _fit_codebooks(x, m, n_codes, iters, seed)
     assigned = assign_centroid(corpus.select(id_col, vec_col), vec_col, cents)
     _encode_with_vec(
         assigned, books, id_col, vec_col, passthrough=("centroid",),
         residual_cents=cmat if residual else None,
     ).write.mode("overwrite").partitionBy("centroid").parquet(path)
-    from .ivf import write_small_json
-
     write_small_json(
         spark, path.rstrip("/") + "__meta",
         {"centroids": json.dumps(cents), "codebooks": json.dumps(books.tolist()),
@@ -513,10 +495,6 @@ def build_ivfpq_index(
 def _load_ivfpq_meta(spark, path: str):
     """(centroids, codebooks, residual) persisted by build_ivfpq_index.
     Pre-residual indexes have no 'residual' field — treated as raw."""
-    import json
-
-    from .ivf import read_small_json
-
     meta = read_small_json(spark, path.rstrip("/") + "__meta")
     residual = meta.get("residual") == "1"
     return (
@@ -539,8 +517,6 @@ def append_ivfpq_index(
     assign + encode ONLY the batch, append centroid-partitioned files.
     Cost scales with the batch, never the index; rebuild on distribution
     drift, append otherwise."""
-    from .ivf import assign_centroid
-
     cents, books, residual = _load_ivfpq_meta(spark, path)
     assigned = assign_centroid(new_vecs.select(id_col, vec_col), vec_col, cents)
     _encode_with_vec(
@@ -578,35 +554,17 @@ def search_ivfpq_index(
     end to end — distributed probe routing (ivf.probe_centroids) + the
     core's salted centroid cogroup over the stored codes, so only the two
     training artifacts are ever broadcast."""
-    from .ivf import probe_centroids, probed_centroids, route_queries
-
     # residual mode changes only how codes were TRAINED/encoded; within one
     # inverted list q·x and the residual-ADC estimate differ by a per-list
     # constant and every cut here is per list, so search needs no branch.
     cents, books, _residual = _load_ivfpq_meta(spark, path)
-    keep = k * oversample + 1
-
-    def lists(probed):
-        return spark.read.parquet(path).filter(F.col("centroid").isin(list(probed)))
-
-    q = R.as_queries(queries, id_col, vec_col)
-    if streamed:
-        probes = probe_centroids(q, "__qv", cents, n_probe)
-        idx = lists(probed_centroids(probes))
-        coded = idx.select(F.col(id_col).alias("neighbor_id"), "pq_code", "centroid")
-        cands = R.cogroup(
-            probes, coded, Adc(books), keep, 0.0, corpus_blocks,
-            max_group_rows, "search_ivfpq_index",
-        )
-    else:
-        q = R.side_input(q, max_query_rows, "search_ivfpq_index", "max_query_rows")
-        routes = route_queries(q, cents, n_probe)
-        idx = lists(sorted(routes))
-        coded = idx.select(F.col(id_col).alias("neighbor_id"), "centroid", "pq_code")
-        cands = R.refine(
-            R.scan(coded, q, Adc(books), keep, 0.0, routes), q,
-            R.as_corpus(idx, id_col, vec_col), k, R.cut_margin(score_decimals),
-        )
-    return R.exact_topk(
-        cands, q, R.as_corpus(idx, id_col, vec_col), k, score_decimals
+    cands, q, idx = ivf_candidates(
+        R.as_queries(queries, id_col, vec_col), cents, n_probe, path,
+        Adc(books), k * oversample + 1, 0.0, "search_ivfpq_index", streamed,
+        max_query_rows, corpus_blocks, max_group_rows,
+        (F.col(id_col).alias("neighbor_id"), "centroid", "pq_code"),
     )
+    vectors = R.as_corpus(idx, id_col, vec_col)
+    if not streamed:
+        cands = R.refine(cands, q, vectors, k, R.cut_margin(score_decimals))
+    return R.exact_topk(cands, q, vectors, k, score_decimals)

@@ -8,16 +8,24 @@ Every search in similarity.py, ivf.py and pq.py is the same pipeline
 2. **place** — where the two sides meet: queries broadcast and the corpus
    scanned (``scan``), the index broadcast and the queries scanned
    (``probe``), or both sides in a salted centroid cogroup (``cogroup``);
-3. **candidate cut** — a scorer (``Gemm`` here, ``similarity.Sq8``,
-   ``pq.Adc``) scores each block and ``cut`` keeps, per query, every row
-   within ``margin`` of the block's ``keep``-th best score;
+   the IVF searches reach ``scan`` and ``cogroup`` through one routing
+   step, ``ivf.ivf_candidates``;
+3. **candidate cut** — a scorer turns a query block and a corpus block
+   into the cut's (query_id, sims, neighbor_ids) rows (``rows``), and
+   ``cut`` keeps, per query, every row within ``margin`` of its
+   ``keep``-th best score. ``Gemm`` here, ``similarity.Sq8`` and
+   ``pq.Adc`` take the rows of a queries × corpus score matrix;
+   ``similarity.Hnsw`` builds an HNSW graph as its corpus block and
+   beam-searches it per query;
 4. **exact rescore and rank** — ``exact_topk`` joins the candidate pairs
    to both vector sides, scores them with the sequential double fold
    (``_dot``, identical to the DuckDB oracle's ordered sum), rounds, and
-   ranks by (score desc, neighbor_id asc).
+   ranks by (score desc, neighbor_id asc). HNSW without ``exact_rescore``
+   ranks its beam scores instead (``rank_topk``): its scorer sets
+   ``scores``, so its placement emits the cut's score column.
 
-HNSW beams and LSH buckets generate candidates their own way and end in
-the same ``cut`` and ``rank_topk``.
+LSH buckets generate candidates their own way (a same-bucket join) and
+end in ``fold_topk``.
 
 The near-dup searches (similarity.embedding_dedup_pairs, ``_lsh``,
 ``incremental_embedding_dedup``) threshold instead of ranking, and share
@@ -125,10 +133,6 @@ def cut(rows, keep: int, margin: float, scores: bool = False) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _block_rows(q_ids, sims, c_ids):
-    return ((q_ids[i], sims[i], c_ids) for i in range(len(q_ids)))
-
-
 def _mat(col, dtype) -> np.ndarray:
     return np.array(list(col), dtype=dtype)
 
@@ -137,8 +141,13 @@ class Gemm:
     """Exact scorer: float64 query rows · corpus ``__cv`` vectors.
 
     A scorer turns query vectors into a query block (``queries``) and a
-    corpus frame into a corpus block (``corpus``); ``score`` maps the two
-    to a queries × rows similarity matrix."""
+    corpus frame into a corpus block (``corpus``); ``rows`` yields the
+    cut's (query_id, sims, neighbor_ids) rows of the two blocks — here
+    the rows of ``score``, a queries × corpus-rows similarity matrix.
+    ``scores``: the placements emit the cut's score column (only a scorer
+    whose scores are final ranking scores sets it)."""
+
+    scores = False
 
     def queries(self, vecs) -> np.ndarray:
         return _mat(vecs, np.float64)
@@ -148,6 +157,10 @@ class Gemm:
 
     def score(self, q: np.ndarray, c: np.ndarray) -> np.ndarray:
         return q @ c.T
+
+    def rows(self, q_ids, q, c, c_ids):
+        sims = self.score(q, c)
+        return ((q_ids[i], sims[i], c_ids) for i in range(len(q_ids)))
 
 
 def as_queries(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -274,6 +287,10 @@ def side_input(df: DataFrame, max_rows: int, what: str, knob: str) -> SideInput:
 # -------------------------------------------------------------- placement
 
 
+def _schema(scorer) -> str:
+    return PAIRS + ", score double" if scorer.scores else PAIRS
+
+
 def scan(
     corpus: DataFrame,
     queries: SideInput,
@@ -303,11 +320,12 @@ def scan(
                 q_ids, qb = tbl.get(g if g is None else int(g), ((), None))
                 if not len(q_ids) or grp.empty:
                     continue
-                sims = scorer.score(qb, scorer.corpus(grp))
-                c_ids = grp["neighbor_id"].to_numpy()
-                yield cut(_block_rows(q_ids, sims, c_ids), keep, margin)
+                rows = scorer.rows(
+                    q_ids, qb, scorer.corpus(grp), grp["neighbor_id"].to_numpy()
+                )
+                yield cut(rows, keep, margin, scorer.scores)
 
-    return corpus.mapInPandas(gen, PAIRS)
+    return corpus.mapInPandas(gen, _schema(scorer))
 
 
 def probe(
@@ -315,7 +333,8 @@ def probe(
 ) -> DataFrame:
     """Candidates with the (guarded) index side broadcast: each query
     Arrow batch — (query_id, __qv) — is scored against the whole index
-    block, so queries never pass through the driver."""
+    block, so queries never pass through the driver. The index block is
+    built once, on the driver (for ``Hnsw``, the graph)."""
     bc = queries.sparkSession.sparkContext.broadcast(
         (index.ids, scorer.corpus(index.rows))
     )
@@ -326,10 +345,10 @@ def probe(
             if pdf.empty:
                 continue
             q_ids = pdf["query_id"].to_numpy()
-            sims = scorer.score(scorer.queries(pdf["__qv"]), cb)
-            yield cut(_block_rows(q_ids, sims, c_ids), keep, margin)
+            rows = scorer.rows(q_ids, scorer.queries(pdf["__qv"]), cb, c_ids)
+            yield cut(rows, keep, margin, scorer.scores)
 
-    return queries.mapInPandas(gen, PAIRS)
+    return queries.mapInPandas(gen, _schema(scorer))
 
 
 def cogroup(
@@ -349,7 +368,10 @@ def cogroup(
     and Θ(queries · n_probe / n_clusters) query rows. Both sides fail
     actionably past ``max_group_rows``. Block splitting can only add
     candidates (Containment), and each corpus row lives in exactly one
-    group, so the pairs are unique without a dedup shuffle."""
+    group, so the pairs are unique without a dedup shuffle. With one
+    literal centroid on both sides the groups are plain corpus shards,
+    every query meeting each (sharded HNSW). ``what`` prefixes the guard
+    errors; a caller whose lever is not ``corpus_blocks`` names it there."""
     B = max(1, corpus_blocks)
     inv_b = inv.withColumn(
         "__blk", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(B)).cast("int")
@@ -360,7 +382,7 @@ def cogroup(
 
     def group(_key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
         if qpdf.empty or cpdf.empty:
-            return cut((), keep, margin)
+            return cut((), keep, margin, scorer.scores)
         if len(cpdf) > max_group_rows:
             raise ValueError(
                 f"{what}: inverted-list block for centroid "
@@ -378,16 +400,16 @@ def cogroup(
                 f"~queries*n_probe/n_clusters; size k ~ sqrt(n)) or raise "
                 f"the cap explicitly"
             )
-        q_ids = qpdf["query_id"].to_numpy()
-        sims = scorer.score(scorer.queries(qpdf["__qv"]), scorer.corpus(cpdf))
-        return cut(
-            _block_rows(q_ids, sims, cpdf["neighbor_id"].to_numpy()), keep, margin
+        rows = scorer.rows(
+            qpdf["query_id"].to_numpy(), scorer.queries(qpdf["__qv"]),
+            scorer.corpus(cpdf), cpdf["neighbor_id"].to_numpy(),
         )
+        return cut(rows, keep, margin, scorer.scores)
 
     return (
         probes_b.groupBy("centroid", "__blk")
         .cogroup(inv_b.groupBy("centroid", "__blk"))
-        .applyInPandas(group, PAIRS)
+        .applyInPandas(group, _schema(scorer))
     )
 
 

@@ -13,8 +13,11 @@ generators:
 - **hyperplane LSH buckets** (``cosine_topk_lsh``): md5-derived planes, so
   plans are reproducible; only same-bucket pairs are scored;
 - **HNSW beams** (``cosine_topk_hnsw`` / ``_sharded``): Voyager parity on a
-  pure-numpy graph (functions/hnsw.py); ``ef_search=None`` is exhaustive
-  and, with ``exact_rescore``, exact;
+  pure-numpy graph (functions/hnsw.py) behind the ``Hnsw`` scorer, which
+  builds the graph as its corpus block and beam-searches it per query —
+  placed by the core's ``probe`` (the graph broadcast as a side input) or
+  ``cogroup`` (one graph per corpus shard); ``ef_search=None`` is
+  exhaustive and, with ``exact_rescore``, exact;
 - the embedding near-dup family (exact block-pair GEMM, banded LSH,
   incremental staged index), which thresholds instead of ranking: its
   candidates end in the core's threshold tail (``margin_pairs`` →
@@ -35,6 +38,7 @@ from scio_spark.operators.smb import save_sorted_bucket
 
 from . import retrieval as R
 from .dedup import incremental_probe, stage_bounded
+from .hnsw import build_hnsw, search_hnsw
 
 
 def cosine_topk(
@@ -582,6 +586,39 @@ def cosine_topk_lsh(
     return R.fold_topk(pairs, k, score_decimals)
 
 
+class Hnsw:
+    """HNSW scorer: a query block is float64 query rows, a corpus block is
+    the HNSW graph built over the block's ``__cv`` rows
+    (functions/hnsw.py), and ``rows`` beam-searches it once per query.
+    For an exact rescore the whole ef-beam goes to the cut, whose
+    ``cut_margin`` keeps what containment needs (functions/retrieval.py);
+    otherwise the top k+1 beam rows are kept and ranked on their beam
+    scores (``scores``)."""
+
+    def __init__(self, k, ef_search, exact, m, ef_construction):
+        self.k, self.ef_search, self.exact = k, ef_search, exact
+        self.m, self.ef_construction = m, ef_construction
+        self.scores = not exact
+
+    def queries(self, vecs):
+        return R._mat(vecs, np.float64)
+
+    def corpus(self, pdf):
+        return build_hnsw(
+            R._mat(pdf["__cv"], np.float64), m=self.m,
+            ef_construction=self.ef_construction,
+        )
+
+    def rows(self, q_ids, q, index, c_ids):
+        ef = index.n if self.ef_search is None else max(self.ef_search, self.k + 2)
+        n_keep = ef if self.exact else min(self.k + 1, index.n)
+        for q_id, vec in zip(q_ids, q):
+            found = search_hnsw(index, vec, n_keep, ef)
+            sims = np.fromiter((s for s, _ in found), np.float64, len(found))
+            rows = np.fromiter((r for _, r in found), np.int64, len(found))
+            yield q_id, sims, c_ids[rows]
+
+
 def cosine_topk_hnsw(
     corpus: DataFrame,
     queries: DataFrame,
@@ -598,10 +635,11 @@ def cosine_topk_hnsw(
     """Voyager/HNSW ANN parity (scio-extra voyager/syntax/
     SCollectionSyntax.scala:47-215 ``asVoyagerSideInput`` → per-element
     lookup): the corpus becomes an in-memory HNSW graph SIDE INPUT
-    (pure-numpy, functions/hnsw.py — no native dependency) — built once,
-    broadcast to every executor — and queries probe it per Arrow batch.
-    Same output contract as cosine_topk: (query_id, neighbor_id, score,
-    rank), self-matches dropped.
+    (pure-numpy, functions/hnsw.py — no native dependency) — built once
+    on the driver by the ``Hnsw`` scorer, broadcast by the core's
+    ``probe`` — and queries probe it per Arrow batch. Same output contract
+    as cosine_topk: (query_id, neighbor_id, score, rank), self-matches
+    dropped.
 
     Like scio's Annoy/Voyager side inputs, the CORPUS is side-input-sized
     BY CONTRACT (an HNSW graph is a single in-memory artifact); guarded by
@@ -616,53 +654,16 @@ def cosine_topk_hnsw(
     exactly reproducible in the DuckDB oracle; otherwise they are ranked
     on their beam scores. Recall of the
     approximate regime is pinned in tests/test_hnsw.py."""
-    import pickle
-
-    from scio_spark.functions.hnsw import build_hnsw
-
     cs = R.side_input(
         R.as_corpus(corpus, id_col, vec_col), max_corpus_rows,
         "cosine_topk_hnsw", "max_corpus_rows",
     )
-    index = build_hnsw(
-        R._mat(cs.rows["__cv"], np.float64), m=m, ef_construction=ef_construction
-    )
-    bc = corpus.sparkSession.sparkContext.broadcast(pickle.dumps((cs.ids, index)))
-
-    def gen(batches):
-        c_ids, idx = pickle.loads(bc.value)
-        for pdf in batches:
-            if len(pdf):
-                yield _hnsw_cut(
-                    idx, c_ids, pdf, k, ef_search, exact_rescore, score_decimals
-                )
-
     q = R.as_queries(queries, id_col, vec_col)
-    cands = q.mapInPandas(gen, R.PAIRS + ", score double")
+    hn = Hnsw(k, ef_search, exact_rescore, m, ef_construction)
+    cands = R.probe(q, cs, hn, k + 1, R.cut_margin(score_decimals))
     if not exact_rescore:
         return R.rank_topk(cands, k, score_decimals)
-    return R.exact_topk(cands.drop("score"), q, cs, k, score_decimals)
-
-
-def _hnsw_cut(index, c_ids, qpdf, k, ef_search, exact, score_decimals):
-    """HNSW candidate generator: beam-search each (query_id, __qv) row of
-    ``qpdf``, then the shared cut → (query_id, neighbor_id, beam score).
-    For an exact rescore the whole ef-beam goes through the cut with
-    ``cut_margin`` (containment, functions/retrieval.py); otherwise the
-    top k+1 beam rows are kept and ranked on their beam scores."""
-    from scio_spark.functions.hnsw import search_hnsw
-
-    ef = index.n if ef_search is None else max(ef_search, k + 2)
-    n_keep = ef if exact else min(k + 1, index.n)
-
-    def beams():
-        for q_id, vec in zip(qpdf["query_id"].to_numpy(), qpdf["__qv"]):
-            found = search_hnsw(index, np.asarray(vec, np.float64), n_keep, ef)
-            sims = np.fromiter((s for s, _ in found), np.float64, len(found))
-            rows = np.fromiter((r for _, r in found), np.int64, len(found))
-            yield q_id, sims, c_ids[rows]
-
-    return R.cut(beams(), k + 1, R.cut_margin(score_decimals), scores=True)
+    return R.exact_topk(cands, q, cs, k, score_decimals)
 
 
 def cosine_topk_hnsw_sharded(
@@ -685,8 +686,10 @@ def cosine_topk_hnsw_sharded(
     every shard, and ONE cogrouped task per shard builds that shard's
     HNSW sub-graph (a Python insert loop over only n/n_shards vectors —
     the build parallelizes across shards instead of serializing on the
-    driver) and probes its replicated query block. Nothing corpus- or
-    query-sized touches the driver or a broadcast.
+    driver) and probes its replicated query block. That is the core's
+    salted cogroup (retrieval.cogroup) over one literal centroid with
+    ``corpus_blocks = n_shards`` and the ``Hnsw`` scorer. Nothing corpus-
+    or query-sized touches the driver or a broadcast.
 
     Shards are blocks of the corpus, so the per-shard cuts contain the
     global top-k (containment, functions/retrieval.py): with
@@ -703,46 +706,14 @@ def cosine_topk_hnsw_sharded(
     of the query set — the price of removing the broadcast; for
     corpus-scale query sets prefer the IVF/LSH routes, which shuffle
     queries once."""
-    from scio_spark.functions.hnsw import build_hnsw
-
-    S = max(1, n_shards)
-    c = R.as_corpus(corpus, id_col, vec_col)
-    cshard = c.withColumn(
-        "__shard", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(S)).cast("int")
-    )
     q = R.as_queries(queries, id_col, vec_col)
-    qshard = q.withColumn("__shard", F.explode(F.array(*[F.lit(i) for i in range(S)])))
-
-    def shard(_key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return R.cut((), k, 0.0, scores=True)
-        if len(cpdf) > max_group_rows:
-            raise ValueError(
-                f"cosine_topk_hnsw_sharded: shard "
-                f"{int(cpdf['__shard'].iloc[0])} has {len(cpdf)} corpus "
-                f"rows > max_group_rows={max_group_rows}; increase "
-                f"n_shards (per-task shard is ~n/n_shards rows) or raise "
-                f"the cap explicitly"
-            )
-        if len(qpdf) > max_group_rows:
-            raise ValueError(
-                f"cosine_topk_hnsw_sharded: {len(qpdf)} queries replicated "
-                f"to shard {int(qpdf['__shard'].iloc[0])} > "
-                f"max_group_rows={max_group_rows}; shard the query "
-                f"workload across runs (queries replicate to EVERY shard "
-                f"here) or use the IVF/LSH routes, or raise the cap"
-            )
-        index = build_hnsw(
-            R._mat(cpdf["__cv"], np.float64), m=m, ef_construction=ef_construction
-        )
-        c_ids = cpdf["neighbor_id"].to_numpy()
-        return _hnsw_cut(index, c_ids, qpdf, k, ef_search, exact_rescore, score_decimals)
-
-    cands = (
-        qshard.groupBy("__shard")
-        .cogroup(cshard.groupBy("__shard"))
-        .applyInPandas(shard, R.PAIRS + ", score double")
+    c = R.as_corpus(corpus, id_col, vec_col)
+    cands = R.cogroup(
+        q.withColumn("centroid", F.lit(0)), c.withColumn("centroid", F.lit(0)),
+        Hnsw(k, ef_search, exact_rescore, m, ef_construction), k + 1,
+        R.cut_margin(score_decimals), n_shards, max_group_rows,
+        "cosine_topk_hnsw_sharded (corpus_blocks = n_shards)",
     )
     if not exact_rescore:
         return R.rank_topk(cands, k, score_decimals)
-    return R.exact_topk(cands.drop("score"), q, c, k, score_decimals)
+    return R.exact_topk(cands, q, c, k, score_decimals)

@@ -166,7 +166,8 @@ def test_side_input_guard_raises_not_ooms(vec_df, tmp_path):
     import pytest
 
     from scio_spark.functions.ivf import build_ivf_index, search_ivf_index
-    from scio_spark.functions.similarity import cosine_topk
+    from scio_spark.functions.pq import build_ivfpq_index, search_ivfpq_index
+    from scio_spark.functions.similarity import cosine_topk, cosine_topk_hnsw
 
     with pytest.raises(ValueError, match="max_query_rows"):
         cosine_topk(vec_df, vec_df, k=3, max_query_rows=10)
@@ -177,3 +178,13 @@ def test_side_input_guard_raises_not_ooms(vec_df, tmp_path):
         search_ivf_index(
             vec_df.sparkSession, path, vec_df, k=3, max_query_rows=10
         )
+
+    pq_path = str(tmp_path / "ivfpq_guard")
+    build_ivfpq_index(vec_df, pq_path, n_clusters=4, m=4, n_codes=8, iters=2)
+    with pytest.raises(ValueError, match="max_query_rows"):
+        search_ivfpq_index(
+            vec_df.sparkSession, pq_path, vec_df, k=3, max_query_rows=10
+        )
+
+    with pytest.raises(ValueError, match="max_corpus_rows"):
+        cosine_topk_hnsw(vec_df, vec_df, k=3, max_corpus_rows=10)

@@ -230,10 +230,12 @@ def test_hnsw_sharded_group_guard_trips(spark):
 
     emb = _fixture(spark)
     qs = emb.filter("vec_id % 9 = 0")
-    with pytest.raises(Exception, match="max_group_rows"):
+    with pytest.raises(Exception, match="max_group_rows") as err:
         cosine_topk_hnsw_sharded(
             emb, qs, k=3, n_shards=2, max_group_rows=10
         ).collect()
+    # the error names the lever a sharded-HNSW caller can set
+    assert "n_shards" in str(err.value)
 
 
 def test_hnsw_exact_rescore_cut_keeps_rounding_boundary_ties(spark):

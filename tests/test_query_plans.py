@@ -272,6 +272,14 @@ TOP_COMPUTE_BUDGETS = {
     "incremental_embedding_dedup": (5, "BroadcastHashJoin"),
     "semantic_dedup": (2, None),
     "semantic_dedup_incremental": (2, None),
+    # the rest of the top-k family (IVF in-memory and persisted, PQ and
+    # IVF-PQ indexes, sharded HNSW), pinned before the IVF searches shared
+    # one routing step and HNSW moved onto the core's placements
+    "ann_ivf": (3, "BroadcastHashJoin"),
+    "ann_ivf_appended": (3, "BroadcastHashJoin"),
+    "ann_pq_index": (4, "BroadcastHashJoin"),
+    "ann_ivfpq_index": (4, "BroadcastHashJoin"),
+    "ann_hnsw_sharded": (5, "BroadcastHashJoin"),
 }
 
 
