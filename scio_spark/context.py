@@ -21,6 +21,8 @@ from typing import Any, Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scio_spark import _cds
+
 
 #: Spark confs tuned for correctness-vs-oracle and local[32] benching, chosen to
 #: also be the right defaults on a 1000-executor cluster (AQE owns runtime
@@ -61,7 +63,31 @@ def build_session(
     master: str | None = None,
     confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or reuse) a SparkSession with scale-sane defaults."""
+    """Create (or reuse) a SparkSession with scale-sane defaults.
+
+    When this call launches the driver JVM, it loads Spark's classes from a
+    dynamic class-data-sharing archive (JDK 13+, JEP 350), which cuts the
+    JVM and session start by ~40% (perfbench ``setup_s`` 16-17 s -> ~10 s
+    on a 4-core host). The archive is cached per JDK and Spark install in
+    ``${XDG_CACHE_HOME:-~/.cache}/scio_spark/cds/``, keyed by a digest of
+    the ``java`` binary (real path, size, mtime), the ``$SPARK_HOME/jars``
+    listing and ``spark.jars`` / ``spark.driver.extraClassPath``.
+
+    - First run per key: the one process that takes the cache's lock has
+      its JVM write the archive at exit. That run's start is a few seconds
+      slower and its interpreter waits ~10-40 s longer at exit; other
+      processes meanwhile start without the archive.
+    - The JVM only ever maps an archive that a JVM wrote and exited 0 from
+      and that a ``java -version`` maps cleanly; temp files and locks of
+      killed processes are removed by the next start.
+    - No archive is used, and the JVM starts exactly as without one, when
+      the cache dir is unwritable and holds no archive, when
+      ``$SPARK_CONF_DIR`` holds anything but ``*.template`` files (dynamic
+      CDS refuses a non-empty directory on the classpath; a templates-only
+      conf dir is swapped for an empty one for the launch), when the
+      Hadoop/YARN conf dirs or ``SPARK_DIST_CLASSPATH`` are set, or when
+      ``spark.driver.extraJavaOptions`` already sets CDS flags. When a JVM
+      already exists, nothing changes. See ``scio_spark/_cds.py``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
@@ -79,9 +105,10 @@ def build_session(
     merged["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = cpus
     if confs:
         merged.update(confs)
-    for k, v in merged.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    with _cds.launch(merged) as merged:
+        for k, v in merged.items():
+            builder = builder.config(k, v)
+        return builder.getOrCreate()
 
 
 class ScioResult:

@@ -49,8 +49,34 @@ def _asset_base(spark: SparkSession, n: int) -> DataFrame:
     return spark.range(0, n, 1, parts).select(F.col("id").alias("asset_id"))
 
 
+def _rt_root() -> str:
+    """This process's round-trip root, ``<tempdir>/scio_spark_rt/<pid>``, so
+    two checkouts or concurrent checkers never share files. A query's
+    result reads its files lazily, so the root outlives the query; the
+    first call in a process removes the roots of processes that are gone."""
+    import os
+    import shutil
+    import tempfile
+
+    base = os.path.join(tempfile.gettempdir(), "scio_spark_rt")
+    root = os.path.join(base, str(os.getpid()))
+    if root not in _RT_SWEPT:
+        _RT_SWEPT.add(root)
+        for name in os.listdir(base) if os.path.isdir(base) else ():
+            try:
+                os.kill(int(name), 0)  # raises if the owning process is gone
+            except ProcessLookupError:
+                shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+            except (ValueError, PermissionError):
+                pass  # not a root, or a live process under another uid
+    return root
+
+
+_RT_SWEPT: set[str] = set()
+
+
 def _rt_path(sf_dir: str, name: str) -> str:
     import os
 
     sf = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return f"/tmp/scio_spark_rt/{sf}/{name}"
+    return os.path.join(_rt_root(), sf, name)

@@ -219,34 +219,10 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a networked warehouse URL (same code path; a cluster deployment
     swaps the URL and raises num_partitions for parallel reads with
     partitionColumn bounds)."""
-    import os
-
-    # per-process DB directory: embedded Derby takes an exclusive JVM boot
-    # lock on the directory, so two concurrent sessions (e.g. the oracle
-    # gate and a plan audit) sharing one path would fail spuriously.
-    # The dir can't be removed after this query (the JDBC read is lazy —
-    # the driver collects later), so bound runtime-dir growth by sweeping
-    # siblings left by processes that are no longer alive.
-    import shutil
-
-    path = _rt_path(sf_dir, f"derby_{os.getpid()}")
-    parent = os.path.dirname(path)
-    if os.path.isdir(parent):
-        for name in os.listdir(parent):
-            if not name.startswith("derby_"):
-                continue
-            try:
-                pid = int(name[len("derby_"):])
-            except ValueError:
-                continue
-            if pid == os.getpid():
-                continue
-            try:
-                os.kill(pid, 0)  # raises if the owning process is gone
-            except ProcessLookupError:
-                shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-            except PermissionError:
-                pass  # pid alive under another uid — leave its DB alone
+    # Embedded Derby takes an exclusive JVM boot lock on its directory;
+    # the round-trip root is per process, so concurrent sessions (e.g. the
+    # oracle gate and a plan audit) never share one.
+    path = _rt_path(sf_dir, "derby")
     url = f"jdbc:derby:{path};create=true"
     drv = "org.apache.derby.jdbc.EmbeddedDriver"
     sc = _ctx(spark)

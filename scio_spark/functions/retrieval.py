@@ -360,6 +360,10 @@ def cogroup(
     corpus_blocks: int,
     max_group_rows: int,
     what: str,
+    query_lever: str = (
+        "increase n_clusters (expected per-centroid query volume is "
+        "~queries*n_probe/n_clusters; size k ~ sqrt(n))"
+    ),
 ) -> DataFrame:
     """Candidates from a salted centroid cogroup: probes (query_id, __qv,
     centroid) meet inverted lists (neighbor_id, scorer columns, centroid)
@@ -371,7 +375,8 @@ def cogroup(
     group, so the pairs are unique without a dedup shuffle. With one
     literal centroid on both sides the groups are plain corpus shards,
     every query meeting each (sharded HNSW). ``what`` prefixes the guard
-    errors; a caller whose lever is not ``corpus_blocks`` names it there."""
+    errors; a caller whose lever is not ``corpus_blocks`` names it there,
+    and ``query_lever`` names the query side's (default: IVF's)."""
     B = max(1, corpus_blocks)
     inv_b = inv.withColumn(
         "__blk", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(B)).cast("int")
@@ -395,9 +400,7 @@ def cogroup(
             raise ValueError(
                 f"{what}: {len(qpdf)} queries routed to centroid "
                 f"{int(qpdf['centroid'].iloc[0])} > "
-                f"max_group_rows={max_group_rows}; increase n_clusters "
-                f"(expected per-centroid query volume is "
-                f"~queries*n_probe/n_clusters; size k ~ sqrt(n)) or raise "
+                f"max_group_rows={max_group_rows}; {query_lever} or raise "
                 f"the cap explicitly"
             )
         rows = scorer.rows(

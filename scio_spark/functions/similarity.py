@@ -713,6 +713,8 @@ def cosine_topk_hnsw_sharded(
         Hnsw(k, ef_search, exact_rescore, m, ef_construction), k + 1,
         R.cut_margin(score_decimals), n_shards, max_group_rows,
         "cosine_topk_hnsw_sharded (corpus_blocks = n_shards)",
+        "split the query workload across runs (every query meets every "
+        "shard) or use the IVF/LSH routes, which shuffle queries once,",
     )
     if not exact_rescore:
         return R.rank_topk(cands, k, score_decimals)

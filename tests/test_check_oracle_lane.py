@@ -42,3 +42,19 @@ def test_sketch_aligned_eq_key_alignment():
     assert not co.sketch_aligned_eq(s2, d2, cols, spec)
     # missing key on one side fails
     assert not co.sketch_aligned_eq([("a", 1000)], [("b", 1000)], cols, spec)
+
+
+def test_oracle_duckdb_is_capped_and_spills_inside_the_checkout():
+    con = co.connect_oracle()
+    limit, spill = con.execute(
+        "SELECT current_setting('memory_limit'), current_setting('temp_directory')"
+    ).fetchone()
+    con.close()
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert limit.endswith("GiB") or limit.endswith("MiB")
+    scale = 2**30 if limit.endswith("GiB") else 2**20
+    assert float(limit.split()[0]) * scale <= mem / 4 * 1.01
+    root = os.path.dirname(os.path.dirname(os.path.abspath(co.__file__)))
+    assert spill == os.path.join(root, ".tmp", "duckdb")
+    with open(os.path.join(root, ".gitignore")) as f:
+        assert ".tmp/" in f.read().split()

@@ -238,6 +238,24 @@ def test_hnsw_sharded_group_guard_trips(spark):
     assert "n_shards" in str(err.value)
 
 
+def test_hnsw_sharded_query_guard_names_its_own_lever(spark):
+    """Every query meets every shard, so a query block past the cap trips
+    the query side (the shards of 80 rows stay far below 40); the message
+    names the levers this operator has, not IVF's n_clusters/n_probe."""
+    import pytest
+
+    from scio_spark.functions.similarity import cosine_topk_hnsw_sharded
+
+    emb = _fixture(spark)
+    with pytest.raises(Exception, match="80 queries") as err:
+        cosine_topk_hnsw_sharded(
+            emb, emb, k=3, n_shards=8, max_group_rows=40
+        ).collect()
+    msg = str(err.value)
+    assert "split the query workload" in msg
+    assert "n_clusters" not in msg and "n_probe" not in msg
+
+
 def test_hnsw_exact_rescore_cut_keeps_rounding_boundary_ties(spark):
     """The r15-opt candidate cut (keep_candidates + cut_margin before the
     JVM rescore) must keep every row within one rounding step of the k-th

@@ -219,6 +219,22 @@ def sketch_aligned_eq(s, d, cols_sorted, spec) -> bool:
     return True
 
 
+def connect_oracle():
+    """DuckDB for the oracle side, capped at a quarter of physical memory
+    and spilling into the checkout's gitignored ``.tmp/duckdb``. Without a
+    cap, ``dedup_clusters`` at sf1 grew past 9 GB beside an 8g Spark heap
+    on a 15 GB host and was OOM-killed. Resource settings only: the SQL and
+    the comparison are unchanged."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    spill = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "duckdb"
+    )
+    return duckdb.connect(config={
+        "memory_limit": f"{max(1, mem // 4 >> 20)}MB",
+        "temp_directory": spill,
+    })
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -228,7 +244,7 @@ def main():
 
     spark = build_session("oracle_check")
 
-    con = duckdb.connect()
+    con = connect_oracle()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
