@@ -87,11 +87,24 @@ def build_session(
       conf dir is swapped for an empty one for the launch), when the
       Hadoop/YARN conf dirs or ``SPARK_DIST_CLASSPATH`` are set, or when
       ``spark.driver.extraJavaOptions`` already sets CDS flags. When a JVM
-      already exists, nothing changes. See ``scio_spark/_cds.py``."""
+      already exists, nothing changes. See ``scio_spark/_cds.py``.
+
+    Python workers (every ``mapInPandas`` / ``applyInPandas``) fork from
+    ``scio_spark._pydaemon`` instead of ``pyspark.daemon``. Before each task
+    PySpark calls ``importlib.invalidate_caches()``, which made every zip
+    importer re-read ``pyspark.zip``'s directory (70-200 ms per task); the
+    daemon's importers re-read a zip only when its mtime or size changed.
+    It is set through ``spark.python.daemon.module`` only when the workers
+    will import this same package: the master is ``local`` or
+    ``local[...]``, ``confs`` names no daemon module (a caller's value
+    wins), and this package's parent dir is the first one holding a
+    ``scio_spark`` package on the workers' path (the JVM's working dir
+    unless ``PYTHONSAFEPATH`` is set, then ``PYTHONPATH``). Otherwise the
+    stock daemon runs, since a daemon the workers cannot import would fail
+    every Python UDF."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
-    )
+    master = master or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
     merged = dict(DEFAULT_CONFS)
     merged["spark.sql.shuffle.partitions"] = cpus
     # File listing fans out like the shuffle: at most one task per core.
@@ -105,10 +118,42 @@ def build_session(
     merged["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = cpus
     if confs:
         merged.update(confs)
+    if DAEMON_CONF not in merged and _workers_import_this_package(master, merged):
+        merged[DAEMON_CONF] = "scio_spark._pydaemon"
     with _cds.launch(merged) as merged:
         for k, v in merged.items():
             builder = builder.config(k, v)
         return builder.getOrCreate()
+
+
+#: Spark's conf naming the module that its Python workers' daemon runs.
+DAEMON_CONF = "spark.python.daemon.module"
+
+
+def _workers_import_this_package(master: str, confs: dict[str, str]) -> bool:
+    """Whether local Python workers would import this same ``scio_spark``.
+    They run ``python -m <daemon>`` in the driver JVM's working dir with
+    ``sys.path`` = that dir (unless ``PYTHONSAFEPATH`` is set), Spark's
+    python zips, ``spark.executorEnv.PYTHONPATH``, then the JVM's
+    ``PYTHONPATH``; the first of these holding a ``scio_spark`` package must
+    be this package's parent dir."""
+    if not (master == "local" or master.startswith("local[")):
+        return False
+    from pyspark import SparkContext
+
+    if SparkContext._jvm is not None:  # a stopped context's JVM is reused
+        system = SparkContext._jvm.java.lang.System
+        cwd, getenv = system.getProperty("user.dir"), system.getenv
+    else:
+        cwd, getenv = os.getcwd(), os.environ.get
+    dirs = [] if getenv("PYTHONSAFEPATH") else [cwd]
+    for paths in (confs.get("spark.executorEnv.PYTHONPATH"), getenv("PYTHONPATH")):
+        dirs += [os.path.join(cwd, d) for d in (paths or "").split(os.pathsep) if d]
+    here = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    for d in dirs:
+        if os.path.isfile(os.path.join(d, "scio_spark", "__init__.py")):
+            return os.path.realpath(d) == here
+    return False
 
 
 class ScioResult:

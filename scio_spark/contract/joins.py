@@ -618,6 +618,8 @@ def q_kv_store_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     DistCache-shipped shards with NO shuffle on the probe side
     (joins.kv_store_join). Aggregated per supplier so the oracle is a plain
     SQL join."""
+    import uuid
+
     from scio_spark.operators.joins import build_kv_store, kv_store_join
 
     sc = _ctx(spark)
@@ -625,7 +627,10 @@ def q_kv_store_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(sc, sf_dir, "supplier")
         .df.select(F.col("s_suppkey").alias("suppkey"), "s_name")
     )
-    store = build_kv_store(sup, "suppkey", n_shards=4)
+    store = build_kv_store(
+        sup, "suppkey", n_shards=4,
+        store_dir=_rt_path(sf_dir, f"kv_store_{uuid.uuid4().hex}"),
+    )
     probe = (
         _t(sc, sf_dir, "lineitem")
         .df.filter("l_quantity >= 48")

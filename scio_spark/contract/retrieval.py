@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from scio_spark.contract._common import _ctx, _t
+from scio_spark.contract._common import _ctx, _rt_path, _t
 
 
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,7 +245,7 @@ def q_ann_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_probe = n_clusters probes every list), so the result over the
     appended index equals brute-force top-3 over the full table and the
     oracle is plain SQL."""
-    import tempfile
+    import uuid
 
     from scio_spark.functions.ivf import (
         append_ivf_index,
@@ -255,7 +255,7 @@ def q_ann_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sc = _ctx(spark)
     emb = _t(sc, sf_dir, "embeddings").df.select("vec_id", "embedding")
-    path = tempfile.mkdtemp(prefix="scio_spark_ivfidx_") + "/idx"
+    path = _rt_path(sf_dir, f"ivf_index_{uuid.uuid4().hex}")
     build_ivf_index(
         emb.filter("vec_id < 300"), path, n_clusters=8, max_iter=2
     )
@@ -415,7 +415,7 @@ def q_ann_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals brute-force top-3 and the oracle is plain SQL; production
     oversample recall is pinned in tests/test_pq.py. The vec_id < 2000
     cap bounds the exhaustive fixture, not the operator."""
-    import tempfile
+    import uuid
 
     from scio_spark.functions.pq import (
         append_pq_index,
@@ -428,7 +428,7 @@ def q_ann_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(sc, sf_dir, "embeddings").df
         .select("vec_id", "embedding").filter("vec_id < 2000")
     )
-    path = tempfile.mkdtemp(prefix="scio_spark_pqidx_") + "/idx"
+    path = _rt_path(sf_dir, f"pq_index_{uuid.uuid4().hex}")
     build_pq_index(
         emb.filter("vec_id < 300"), path, m=8, n_codes=16, iters=4
     )
@@ -473,7 +473,7 @@ def q_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive exactness is mode-independent, so the driver row covers
     the deeper path). Production-parameter recall and the streamed
     (salted cogroup) parity are pinned in tests/test_pq.py."""
-    import tempfile
+    import uuid
 
     from scio_spark.functions.pq import (
         append_ivfpq_index,
@@ -486,7 +486,7 @@ def q_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(sc, sf_dir, "embeddings").df
         .select("vec_id", "embedding").filter("vec_id < 2000")
     )
-    path = tempfile.mkdtemp(prefix="scio_spark_ivfpqidx_") + "/idx"
+    path = _rt_path(sf_dir, f"ivfpq_index_{uuid.uuid4().hex}")
     build_ivfpq_index(
         emb.filter("vec_id < 300"), path, n_clusters=8, m=8, n_codes=16,
         iters=4, max_iter=2, residual=True,
@@ -587,7 +587,7 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, the batch marks equal a full rebuild's marks restricted to the
     batch (pinned in tests), so the oracle is the semantic_dedup SQL
     filtered to batch ids."""
-    import tempfile
+    import uuid
 
     from scio_spark.functions.semdedup import (
         incremental_semantic_dedup,
@@ -602,7 +602,7 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     hist = emb.filter("vec_id < 400")
     batch = emb.filter("vec_id >= 400")
-    path = tempfile.mkdtemp(prefix="scio_spark_semidx_")
+    path = _rt_path(sf_dir, f"sem_index_{uuid.uuid4().hex}")
     stage_semantic_index(hist, "vec_id", "embedding", cents, path)
     marked = incremental_semantic_dedup(
         batch, path, "vec_id", "embedding", eps=0.45, append=False

@@ -340,6 +340,8 @@ def test_large_hash_join_matches_regular_join(spark, monkeypatch, tmp_path):
         raise AssertionError("large_hash_join materialized RHS on the driver")
 
     monkeypatch.setattr(SparkDF, "toLocalIterator", trap)
+    # the shard_dir-less call below makes its store dir under tempdir
+    monkeypatch.setattr("tempfile.tempdir", str(tmp_path))
     left = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 3), ("x", 9)], ["key", "v"]
     )
@@ -400,7 +402,7 @@ def test_sparse_join_bloom_null_keys(sc):
         assert got == rows(ref.df, "key", "v", "w"), how
 
 
-def test_large_hash_join_preserves_value_types(spark, tmp_path):
+def test_large_hash_join_preserves_value_types(spark, tmp_path, monkeypatch):
     """The sqlite KV channel must round-trip non-JSON-native RHS value types
     (date, timestamp, decimal, binary, array) to their declared Spark types —
     the old json.dumps(default=str) path degraded them to strings that failed
@@ -428,6 +430,7 @@ def test_large_hash_join_preserves_value_types(spark, tmp_path):
     e = sorted((tuple(r) for r in expect.collect()), key=repr)
     assert g == e
     # left-outer nulls in typed columns survive too
+    monkeypatch.setattr("tempfile.tempdir", str(tmp_path))  # its store dir
     lo = J.large_hash_join(left, right, "key", how="left").collect()
     assert {r["key"]: r["d"] for r in lo}["c"] is None
 
